@@ -88,3 +88,36 @@ def test_decode_ppm_validates_header():
         codecs.decode(bad_max, "ppm", 2, 2)
     with pytest.raises(ValueError, match="missing header"):
         codecs.decode(b"P6 2 2 255", "ppm", 2, 2)
+
+
+def _slow_phash(px):
+    """Independent avg_phash: per-block Python-int sums, bit k set iff
+    64·block_k > total, bit 0 the most significant."""
+    h, w = px.shape[:2]
+    bh, bw = h // 8, w // 8
+    blocks = [
+        sum(px[by * bh:(by + 1) * bh, bx * bw:(bx + 1) * bw].ravel().tolist())
+        for by in range(8) for bx in range(8)
+    ]
+    total = sum(blocks)
+    v = 0
+    for b in blocks:
+        v = (v << 1) | (64 * b > total)
+    return v - (1 << 64) if v >= (1 << 63) else v
+
+
+def test_phash_matches_slow_reference():
+    rng = np.random.default_rng(20)
+    shapes = [(8, 8), (16, 8), (8, 64), (24, 40), (256, 256), (256, 128),
+              (512, 512), (512, 1024), (1024, 512)]
+    shapes += [(8 * int(rng.integers(1, 65)), 8 * int(rng.integers(1, 65)))
+               for _ in range(12)]
+    imgs = [rng.integers(0, 256, (h, w, 3), dtype=np.uint8) for h, w in shapes]
+    # low-contrast images put many blocks right at the threshold
+    imgs += [rng.integers(127, 129, (h, w, 3), dtype=np.uint8)
+             for h, w in shapes[:6]]
+    imgs += [np.zeros((64, 32, 3), np.uint8),
+             np.full((512, 1024, 3), 255, np.uint8),
+             np.full((40, 8, 3), 255, np.uint8)]
+    for px in imgs:
+        assert codecs.avg_phash(px) == _slow_phash(px), px.shape

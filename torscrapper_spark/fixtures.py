@@ -26,6 +26,7 @@ reference simulator can share them):
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -85,31 +86,42 @@ def _noisy(url: str, kind: int) -> str:
     return f"{url}#x"
 
 
+@functools.lru_cache(maxsize=16)
+def _gradient(h: int, w: int) -> np.ndarray:
+    """Smooth luminance gradient of an (h, w) image, shared read-only by
+    every page of that size: uint8 (it peaks at 255), zero-padded to
+    whole 8×8 tiles and shaped (h/8, 8, w/8, 8, 1) so it broadcasts
+    against the per-tile texture."""
+    yy = np.arange(h, dtype=np.int32)[:, None]
+    xx = np.arange(w, dtype=np.int32)[None, :]
+    bh, bw = (h + 7) // 8, (w + 7) // 8
+    g = np.zeros((bh * 8, bw * 8), np.uint8)
+    g[:h, :w] = (yy * 255 // max(h - 1, 1) + xx * 255 // max(w - 1, 1)) // 2
+    g = g.reshape(bh, 8, bw, 8, 1)
+    g.flags.writeable = False
+    return g
+
+
 def _pixels(rng: np.random.Generator, h: int, w: int) -> np.ndarray:
     """Natural-ish synthetic image: smooth luminance gradient + random
     8×8 block texture + per-channel phase. Unlike uniform noise (which
     is incompressible and unlike any real photo), this compresses under
     zlib the way real images do, while still varying per image so PSNR,
-    phash, and dedup checks stay meaningful."""
-    yy = np.arange(h, dtype=np.int32)[:, None]
-    xx = np.arange(w, dtype=np.int32)[None, :]
-    grad = (yy * 255 // max(h - 1, 1) + xx * 255 // max(w - 1, 1)) // 2
+    phash, and dedup checks stay meaningful.
+
+    The RNG draws stay int32 and in this order (the bit-stream
+    consumption, and therefore the image content, must not change).
+    The phase is added on the (h/8, w/8, 3) tile grid (at most
+    95 + 63 = 158, so uint8), and the one full-resolution operation is
+    a uint8 add of the tiles broadcast over the cached gradient, whose
+    wrap-around is the ``% 256`` of the pixel formula."""
     bh, bw = (h + 7) // 8, (w + 7) // 8
-    # RNG draws stay int32 (the bit-stream consumption — and therefore
-    # the image content — must not change), but the full-resolution
-    # arithmetic runs in uint16: max value 255+95+63=413 < 2^16, so the
-    # values are identical while the big temporaries shrink 2×
-    # (generation is memory-bandwidth-sensitive at high parallelism)
-    block = (
-        rng.integers(0, 96, (bh, bw, 3), dtype=np.int32)
-        .astype(np.uint16)
-        .repeat(8, axis=0)
-        .repeat(8, axis=1)[:h, :w]
-    )
-    phase = rng.integers(0, 64, (1, 1, 3), dtype=np.int32).astype(np.uint16)
-    acc = grad.astype(np.uint16)[:, :, None] + block
-    acc += phase
-    return (acc % 256).astype(np.uint8)
+    block = rng.integers(0, 96, (bh, bw, 3), dtype=np.int32)
+    phase = rng.integers(0, 64, (1, 1, 3), dtype=np.int32)
+    tiles = (block + phase).astype(np.uint8)
+    px = np.empty((bh, 8, bw, 8, 3), np.uint8)
+    np.add(_gradient(h, w), tiles[:, None, :, None, :], out=px)
+    return np.ascontiguousarray(px.reshape(bh * 8, bw * 8, 3)[:h, :w])
 
 
 def generate_page(cfg: GraphConfig, i: int, j: int) -> dict:
@@ -145,11 +157,12 @@ def generate_page(cfg: GraphConfig, i: int, j: int) -> dict:
     w = h = side
     fmt = cfg.fmts[(i * 7 + j) % len(cfg.fmts)]
     pixels = _pixels(rng, h, w)
+    data = encode(pixels, fmt)
     image_id = f"{domain_name(i)}/p{j}"
     return {
         "url": url,
         "image_id": image_id,
-        "bytes": encode(pixels, fmt),
+        "bytes": data,
         "w": w,
         "h": h,
         "fmt": fmt,
@@ -159,7 +172,9 @@ def generate_page(cfg: GraphConfig, i: int, j: int) -> dict:
         # tests corrupt one side
         "ref_caption": f"img {image_id} tok {(i * 131 + j * 17) % 997}",
         "phash": avg_phash(pixels),
-        "ref_bytes": encode(pixels, "zlib-rgb"),
+        # a zlib-rgb page's reference IS its payload: one encode, and
+        # validation can skip decoding a reference it already decoded
+        "ref_bytes": data if fmt == "zlib-rgb" else encode(pixels, "zlib-rgb"),
         "html": html,
         "out_links": links,
     }

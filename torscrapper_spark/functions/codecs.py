@@ -179,13 +179,16 @@ def avg_phash(pixels: np.ndarray) -> int:
     bit-exactly. h and w must be multiples of 8. Returned as a signed
     int64 (two's complement) so it round-trips through a Spark
     LongType column.
+
+    Reduction order: each pixel row's 8 column blocks are contiguous
+    runs of (w/8)·3 uint8 values, summed straight from the pixels in
+    uint32 (at most 765·w/8 per row block, exact for any w below 2^24);
+    the h/8 row blocks of each block row are then summed in int64.
     """
     h, w = pixels.shape[:2]
-    gray3 = pixels.astype(np.uint16).sum(axis=2)            # 3·gray, ≤765
-    blocks3 = gray3.reshape(8, h // 8, 8, w // 8).sum(
-        axis=(1, 3), dtype=np.int64
-    )
-    bits = ((blocks3 * 64) > blocks3.sum()).astype(np.uint8).ravel()
+    rows = pixels.reshape(h, 8, (w // 8) * 3).sum(axis=2, dtype=np.uint32)
+    blocks = rows.reshape(8, h // 8, 8).sum(axis=1, dtype=np.int64)
+    bits = ((blocks * 64) > blocks.sum()).astype(np.uint8).ravel()
     v = int.from_bytes(np.packbits(bits).tobytes(), "big")
     return v - (1 << 64) if v >= (1 << 63) else v
 

@@ -137,7 +137,10 @@ def fetch_join(selected: DataFrame, pagestore: DataFrame) -> DataFrame:
 # the same pages; persistent buffers pay that cost exactly once.
 _CHUNK = 64
 _SCRATCH: dict[tuple[int, int], dict[str, np.ndarray]] = {}
-# LRU bound: each (h, w) entry pins up to ~26·chunk·h·w bytes (~109 MB
+# bytes of scratch per pixel of one chunk row: a, r (uint8 RGB), d
+# (int16 RGB) and sq (int32 RGB) are 3 + 3 + 6 + 12
+_SCRATCH_PIXEL_BYTES = 24
+# LRU bound: each (h, w) entry pins up to ~24·chunk·h·w bytes (~100 MB
 # at 256², chunk 64) for the worker's lifetime; against a real store
 # with heterogeneous image sizes an unbounded dict would OOM the Python
 # worker after a few dozen distinct sizes. 4 entries cover the
@@ -152,18 +155,22 @@ _SCRATCH_ENTRY_BYTES = 128 << 20
 # allocating multi-GB scratch. Derived from the entry byte cap so the
 # cap holds even at the chunk floor of 1: a standalone pixel ceiling
 # (2^24 was the old value) let a single near-4096² entry allocate
-# 26·h·w ≈ 436 MB — 3.4× the stated cap — and 4 LRU entries pin ~1.7 GB
-# per worker. 128 MB/26 ≈ 5.16 M pixels ≈ 2272², still far above any
-# fixture (256²) and any sane crawl payload.
+# hundreds of MB, several times the stated cap. The divisor stays at
+# 26 B/pixel, above _SCRATCH_PIXEL_BYTES, so the set of admitted
+# dimensions does not move with the scratch layout: 128 MB/26 ≈ 5.16 M
+# pixels ≈ 2272², still far above any fixture (256²) and any sane
+# crawl payload.
 _MAX_PIXELS = _SCRATCH_ENTRY_BYTES // 26
 
 
-def _bufs(h: int, w: int, grid_ok: bool) -> dict[str, np.ndarray]:
+def _bufs(h: int, w: int) -> dict[str, np.ndarray]:
     b = _SCRATCH.pop((h, w), None)
     if b is None:
         while len(_SCRATCH) >= _SCRATCH_MAX:
             _SCRATCH.pop(next(iter(_SCRATCH)))  # evict least-recent
-        chunk = max(1, min(_CHUNK, _SCRATCH_ENTRY_BYTES // (26 * h * w)))
+        chunk = max(1, min(
+            _CHUNK, _SCRATCH_ENTRY_BYTES // (_SCRATCH_PIXEL_BYTES * h * w)
+        ))
         shape = (chunk, h, w, 3)
         b = {
             "a": np.zeros(shape, np.uint8),
@@ -171,9 +178,6 @@ def _bufs(h: int, w: int, grid_ok: bool) -> dict[str, np.ndarray]:
             "d": np.zeros(shape, np.int16),
             "sq": np.zeros(shape, np.int32),
         }
-        if grid_ok:
-            # the phash-only buffer is dead weight for off-grid (h, w)
-            b["gray3"] = np.zeros((chunk, h, w), np.uint16)
     _SCRATCH[(h, w)] = b  # (re)insert at the most-recent end
     return b
 
@@ -187,6 +191,11 @@ def _validate_group(
     inherent to the wire format, exactly like a JPEG decoder; everything
     downstream (PSNR, perceptual hash, Hamming distance) runs over the
     stacked (chunk, h, w, 3) array, not per row.
+
+    A zlib-rgb row whose reference bytes equal its fetched bytes decodes
+    to the same pixels on both sides, so its reference decode and MSE
+    are skipped and it gets the MSE-0 result (PSNR 99, psnr_ok); its
+    fetched bytes are still decoded and its phash still recomputed.
     """
     if not (0 < h and 0 < w and h * w <= _MAX_PIXELS):
         # hostile dimensions (negative, zero, or absurd): the rows stay
@@ -198,64 +207,80 @@ def _validate_group(
     ref_vals = pdf["ref_bytes"].to_numpy()
     stored_all = pdf["phash"].to_numpy()
     lossy = fmt in LOSSY_FMTS
+    fmt_is_ref = fmt == "zlib-rgb"  # references are always zlib-rgb
     grid_ok = h % 8 == 0 and w % 8 == 0  # loop-invariant phash gate
-    bufs = _bufs(h, w, grid_ok)
+    bufs = _bufs(h, w)
     chunk_rows = bufs["a"].shape[0]  # shrinks for large (h, w)
     for c0 in range(0, len(rows), chunk_rows):
         chunk = rows[c0:c0 + chunk_rows]
         a_buf, r_buf = bufs["a"], bufs["r"]
-        good = []
+        good, same = [], []
         for i in chunk:
             j = len(good)
-            # BOTH decodes sit inside the try: a bad payload must
-            # invalidate the ROW, never kill the task — and against a
-            # real fetcher the reference side is as untrusted as the
-            # fetched side (a None/truncated ref_bytes on a status-200
-            # row raises here too)
+            # the None guard, the byte comparison and BOTH decodes sit
+            # inside the try: a bad payload must invalidate the ROW,
+            # never kill the task — and against a real fetcher the
+            # reference side is as untrusted as the fetched side (a
+            # None/truncated ref_bytes on a status-200 row raises here
+            # too)
             try:
-                a_buf[j] = decode(bytes(byte_vals[i]), fmt, w, h)
-                r_buf[j] = decode(bytes(ref_vals[i]), "zlib-rgb", w, h)
+                data = bytes(byte_vals[i])
+                ref = bytes(ref_vals[i])
+                a_buf[j] = decode(data, fmt, w, h)
+                identical = fmt_is_ref and ref == data
+                if not identical:
+                    r_buf[j] = decode(ref, "zlib-rgb", w, h)
             except Exception:
                 continue
             good.append(i)
+            same.append(identical)
         if not good:
             continue
         k = len(good)
         good = np.asarray(good)
         out["decode_ok"][good] = True
-        a, r = a_buf[:k], r_buf[:k]
+        a = a_buf[:k]
 
         # integer MSE: int16 diff (exact in [-255, 255]), int32 square,
         # f64 mean — every intermediate is an exact integer < 2^53, so
         # the result is bit-deterministic regardless of summation order,
         # and the pipeline stays SIMD (an int32 einsum with a float64
         # accumulator measured 200× slower — the cast defeats
-        # vectorization)
-        d = bufs["d"][:k]
-        np.subtract(a, r, out=d, dtype=np.int16, casting="unsafe")
-        sq = bufs["sq"][:k]
-        np.multiply(d, d, out=sq, dtype=np.int32, casting="unsafe")
-        mse = sq.reshape(k, -1).mean(axis=1, dtype=np.float64)
+        # vectorization). Only rows with a decoded reference take it; a
+        # chunk mixing both kinds gathers those rows first.
+        mse = np.zeros(k)
+        refd = np.flatnonzero(~np.asarray(same))
+        if len(refd):
+            m = len(refd)
+            am, rm = (a, r_buf[:k]) if m == k else (a[refd], r_buf[refd])
+            d = bufs["d"][:m]
+            np.subtract(am, rm, out=d, dtype=np.int16, casting="unsafe")
+            sq = bufs["sq"][:m]
+            np.multiply(d, d, out=sq, dtype=np.int32, casting="unsafe")
+            mse[refd] = sq.reshape(m, -1).mean(axis=1, dtype=np.float64)
         with np.errstate(divide="ignore"):
             p = 20.0 * np.log10(255.0) - 10.0 * np.log10(mse)  # inf @ mse=0
         out["psnr"][good] = np.where(mse == 0.0, 99.0, p)
         out["psnr_ok"][good] = (p >= 40.0) if lossy else (mse == 0.0)
 
-        # batched avg_phash: the same exact-integer formulation as
-        # codecs.avg_phash (64·block_sum > total_sum over uint16
-        # channel sums), so stored hashes reproduce bit-exactly with
-        # no float rounding anywhere. avg_phash's documented
-        # precondition is h, w multiples of 8 — fetched dimensions are
-        # untrusted data, so an off-grid size fails the phash GATE
-        # (phash_match stays False) instead of crashing the reshape
+        # batched avg_phash: the same exact-integer formulation and
+        # reduction order as codecs.avg_phash (contiguous column blocks
+        # of each pixel row summed from uint8 in uint32, then row blocks
+        # in int64; 64·block_sum > total_sum), so stored hashes
+        # reproduce bit-exactly with no float rounding anywhere.
+        # avg_phash's documented precondition is h, w multiples of 8 —
+        # fetched dimensions are untrusted data, so an off-grid size
+        # fails the phash GATE (phash_match stays False) instead of
+        # crashing the reshape
         if not grid_ok:
             continue
-        g3 = bufs["gray3"][:k]
-        np.sum(a, axis=3, dtype=np.uint16, out=g3)
-        blocks3 = g3.reshape(k, 8, h // 8, 8, w // 8).sum(
-            axis=(2, 4), dtype=np.int64
+        row_blocks = a.reshape(k, h, 8, (w // 8) * 3).sum(
+            axis=3, dtype=np.uint32
         )
-        bits = (blocks3 * 64) > blocks3.sum(axis=(1, 2), keepdims=True)
+        blocks = row_blocks.reshape(k, 8, h // 8, 8).sum(
+            axis=2, dtype=np.int64
+        )
+        bits = (blocks * 64) > blocks.sum(axis=(1, 2), keepdims=True)
         packed = np.packbits(bits.reshape(k, 64), axis=1)
         ph = packed.view(">u8")[:, 0].astype(np.uint64)
         stored = stored_all[good].astype(np.int64).view(np.uint64)
