@@ -1,0 +1,57 @@
+"""bench.py's surviving surface, checked without starting Spark: the
+crawl configs of both modes, the spark-submit shape of a scaling leg,
+and that the bench depends on nothing under tools/."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+
+import pytest
+
+import bench
+from torscrapper_spark.plans.crawl import CrawlConfig
+
+
+@pytest.mark.parametrize("mode, salt", [("scaling", 8), ("default", 0)])
+def test_crawl_cfg_builds_for_each_mode(monkeypatch, mode, salt):
+    for name in ("TS_SCALE_SALT", "TS_SCALE_WAVES", "TS_BENCH_WAVES"):
+        monkeypatch.delenv(name, raising=False)
+    cfg = bench.crawl_cfg_for(mode, 16)
+    assert isinstance(cfg, CrawlConfig)
+    assert cfg.pagestore_buckets == 16
+    assert cfg.salt_buckets == salt
+    assert cfg.max_waves == 4
+
+
+def test_submit_leg_cmd_ships_package_and_stages_script(tmp_path):
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    out = str(tmp_path / "leg.json")
+    zip_path = str(tmp_path / "pkg.zip")
+    cmd = bench.submit_leg_cmd(4, out, zip_path, str(stage))
+
+    assert os.path.basename(cmd[0]) == "spark-submit"
+    assert cmd[cmd.index("--master") + 1] == "local[4]"
+    i = cmd.index("--py-files")
+    assert cmd[i + 1] == zip_path
+    script = cmd[i + 2]
+    assert cmd[i + 3:] == ["--one", "4", out]
+    assert os.path.dirname(script) == str(stage)
+    repo = os.path.realpath(bench.REPO)
+    assert os.path.commonpath([os.path.realpath(script), repo]) != repo
+    with open(script, "rb") as a, open(os.path.join(bench.REPO, "bench.py"), "rb") as b:
+        assert a.read() == b.read()
+
+
+def test_bench_imports_nothing_from_tools():
+    code = (
+        "import sys; import bench; "
+        "print([m for m in sys.modules if m == 'tools' or m.startswith('tools.')])"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=bench.REPO,
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert out == "[]"

@@ -35,7 +35,6 @@ frontier / bloom state writes, and one combined output write
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 
@@ -74,6 +73,21 @@ from ..sources.tableio import SnapshotStore
 
 FRONTIER_COLS = ["url", "url_hash", "domain", "depth", "discovered_wave"]
 
+# salted repartition width of the frontier state writes (A17)
+FRONTIER_SALT = 8
+# waves up to this size sort the trace in ONE window task (cheapest:
+# no range-sampler/count mini-jobs); larger waves use the scalable
+# range-partitioned with_global_seq. Round 1 hard-coded 2M, which
+# put a 125k-row single-task sort on the scaling bench's hot path
+# (VERDICT.md "What's wrong" #3; ADVICE.md) — the default is small
+# enough that every bench-scale wave parallelizes.
+TRACE_SINGLE_TASK_ROWS = 50_000
+# budget_select window shuffle width = ceil(frontier_rows / this):
+# data-proportional like state_rows_per_file, so both legs of an
+# (N, 4N) pair run the same window task count for the same rows
+# instead of spark.sql.shuffle.partitions empty-ish tasks.
+SELECT_ROWS_PER_TASK = 400_000
+
 
 def _run_concurrently(jobs) -> None:
     """Submit independent Spark jobs from driver threads (supported by
@@ -81,23 +95,8 @@ def _run_concurrently(jobs) -> None:
     any job propagate."""
     from concurrent.futures import ThreadPoolExecutor
 
-    profile = os.environ.get("TS_CRAWL_PROFILE") == "1"
-
-    def timed(j):
-        if not profile:
-            return j
-
-        def wrapper():
-            t0 = time.time()
-            try:
-                return j()
-            finally:
-                print(f"    [job {j.__name__}] {time.time() - t0:.2f}s",
-                      flush=True)
-        return wrapper
-
     with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        futures = [ex.submit(timed(j)) for j in jobs]
+        futures = [ex.submit(j) for j in jobs]
         for f in futures:
             f.result()
 
@@ -158,15 +157,7 @@ class CrawlConfig:
     seen_filter: str = "bloom"
     cuckoo_buckets: int = 1 << 12  # per shard; 4 slots each
     salt_buckets: int = 0         # >1 enables two-phase budget top-k
-    frontier_salt: int = 8        # salted repartition width (A17)
     pagestore_buckets: int = 0    # >0: pagestore is bucket-partitioned (DPP)
-    # waves up to this size sort the trace in ONE window task (cheapest:
-    # no range-sampler/count mini-jobs); larger waves use the scalable
-    # range-partitioned with_global_seq. Round 1 hard-coded 2M, which
-    # put a 125k-row single-task sort on the scaling bench's hot path
-    # (VERDICT.md "What's wrong" #3; ADVICE.md) — now a tunable with a
-    # default small enough that every bench-scale wave parallelizes.
-    trace_single_task_rows: int = 50_000
     # Salted phase-1 budget top-k only engages above this frontier row
     # count (VERDICT.md r4 next-round #2): phase 1 exists to bound a
     # single hot domain's window input, which only matters when one
@@ -178,11 +169,6 @@ class CrawlConfig:
     # salted == exact and the golden tests force the salted path with
     # salt_min_frontier_rows=0).
     salt_min_frontier_rows: int = 5_000_000
-    # budget_select window shuffle width = ceil(frontier_rows / this):
-    # data-proportional like state_rows_per_file, so both legs of an
-    # (N, 4N) pair run the same window task count for the same rows
-    # instead of spark.sql.shuffle.partitions empty-ish tasks.
-    select_rows_per_task: int = 400_000
     # Snapshot writes size their file count from DATA VOLUME, not task
     # count (VERDICT.md r3 next-round #2): the measured anti-scaling
     # component was the per-wave state writes, whose file count used to
@@ -430,13 +416,12 @@ def run_wave(
     soak up cores the next wave's barrier phases leave idle instead of
     serializing behind a commit barrier (VERDICT.md next-round #2c).
     """
-    profile = os.environ.get("TS_CRAWL_PROFILE") == "1"
     _marks: list[tuple[str, float]] = [("start", time.time())]
 
     def mark(label: str) -> None:
         # always recorded (4 clock reads/wave): the spans feed the
         # crawl summary's per-wave fixed-vs-scalable decomposition
-        # (VERDICT.md r2 next-round #8); `profile` only gates printing
+        # (VERDICT.md r2 next-round #8)
         _marks.append((label, time.time()))
 
     frontier = _read_frontier(spark, store, cfg, wave)
@@ -448,9 +433,10 @@ def run_wave(
         store.read(spark, cfg.seen_filter, wave) if cfg.use_bloom else None
     )
 
-    # salted phase-1 gate + data-proportional window width (see the
-    # CrawlConfig field docs); both are pure physical-plan choices —
-    # the selected set is identical at any (salt, width)
+    # salted phase-1 gate + data-proportional window width (see
+    # salt_min_frontier_rows and SELECT_ROWS_PER_TASK); both are pure
+    # physical-plan choices — the selected set is identical at any
+    # (salt, width)
     salt = (
         cfg.salt_buckets
         if prev_frontier_count >= cfg.salt_min_frontier_rows
@@ -458,8 +444,8 @@ def run_wave(
     )
     sel_width = max(
         1,
-        (int(prev_frontier_count) + cfg.select_rows_per_task - 1)
-        // cfg.select_rows_per_task,
+        (int(prev_frontier_count) + SELECT_ROWS_PER_TASK - 1)
+        // SELECT_ROWS_PER_TASK,
     )
     selected = budget_select(
         frontier, politeness, cfg.default_budget, salt, width=sel_width
@@ -580,7 +566,7 @@ def run_wave(
             "valid", F.spark_partition_id().alias("partition_id"),
         )
         seq_cache = None
-        if n_fetched <= cfg.trace_single_task_rows:
+        if n_fetched <= TRACE_SINGLE_TASK_ROWS:
             w = Window.orderBy(*PRIORITY_COLS)
             trace = base.withColumn("seq", F.row_number().over(w))
         else:
@@ -589,8 +575,8 @@ def run_wave(
             # wave's data at every master, not the core count — it
             # overlaps the next wave's fetch either way
             n_parts = (
-                (n_fetched + cfg.trace_single_task_rows - 1)
-                // cfg.trace_single_task_rows
+                (n_fetched + TRACE_SINGLE_TASK_ROWS - 1)
+                // TRACE_SINGLE_TASK_ROWS
             )
             trace = with_global_seq(base, PRIORITY_COLS,
                                     num_partitions=n_parts)
@@ -660,7 +646,7 @@ def run_wave(
             .unionByName(inserts.withColumn("tombstone", F.lit(False)))
             .withColumn(
                 "_salt",
-                F.pmod(F.xxhash64("url"), F.lit(cfg.frontier_salt)).cast("int"),
+                F.pmod(F.xxhash64("url"), F.lit(FRONTIER_SALT)).cast("int"),
             )
             .repartition(width, "domain", "_salt")
             .drop("_salt")
@@ -707,7 +693,7 @@ def run_wave(
             .unionByName(inserts)
             .withColumn(
                 "_salt",
-                F.pmod(F.xxhash64("url"), F.lit(cfg.frontier_salt)).cast("int"),
+                F.pmod(F.xxhash64("url"), F.lit(FRONTIER_SALT)).cast("int"),
             )
             .repartition(width, "domain", "_salt")
             .drop("_salt")
@@ -847,13 +833,6 @@ def run_wave(
         info["fetched"] = int(job_outputs())
         validated.unpersist()
         mark("outputs")
-        if profile:
-            prev = _marks[0][1]
-            spans = []
-            for label, tt in _marks[1:]:
-                spans.append(f"{label}={tt - prev:.2f}s")
-                prev = tt
-            print(f"[wave {wave}] " + " ".join(spans), flush=True)
 
     return info, finish_outputs
 
