@@ -139,22 +139,20 @@ def crawl_cfg_for(mode: str, pagestore_buckets: int):
     from torscrapper_spark.plans.crawl import CrawlConfig
 
     if mode == "scaling":
-        # salt_buckets=8: the scaling graph has 25 hot domains holding
-        # 30% of in-links, so the run can exercise the two-phase salted
-        # budget top-k (semantic equivalence to the exact window is
-        # pytest-pinned in test_operators.py)
+        # salt_buckets=8 arms the two-phase salted budget top-k, but it
+        # never engages here: the default graph's 2,500 × 200 = 500k
+        # pages keep the frontier below salt_min_frontier_rows (5M), so
+        # both legs run the unsalted window
         return CrawlConfig(
             max_waves=_env_int("TS_SCALE_WAVES", 4),
             default_budget=_env_int("TS_SCALE_BUDGET", 128),
-            use_bloom=True,
             bloom_shards=64, bloom_bits=1 << 19, bloom_k=5,
-            salt_buckets=_env_int("TS_SCALE_SALT", 8),
+            salt_buckets=8,
             pagestore_buckets=pagestore_buckets,
         )
     return CrawlConfig(
         max_waves=_env_int("TS_BENCH_WAVES", 4),
         default_budget=_env_int("TS_BENCH_BUDGET", 8),
-        use_bloom=True,
         bloom_shards=16, bloom_bits=1 << 21, bloom_k=5,
         salt_buckets=0, pagestore_buckets=pagestore_buckets,
     )
@@ -256,7 +254,7 @@ def warmup_crawl(spark, synthetic: bool = False, like=None) -> None:
         ps = SyntheticPagestore(wcfg)
     else:
         ps = C.load_pagestore(spark, f"{tmp}/pagestore.parquet")
-    cfg = C.CrawlConfig(max_waves=2, default_budget=8, use_bloom=True,
+    cfg = C.CrawlConfig(max_waves=2, default_budget=8,
                         bloom_shards=4, bloom_bits=1 << 14, bloom_k=5)
     C.run_crawl(
         spark,

@@ -16,7 +16,7 @@ from torscrapper_spark.plans.crawl import CrawlConfig
 
 @pytest.mark.parametrize("mode, salt", [("scaling", 8), ("default", 0)])
 def test_crawl_cfg_builds_for_each_mode(monkeypatch, mode, salt):
-    for name in ("TS_SCALE_SALT", "TS_SCALE_WAVES", "TS_BENCH_WAVES"):
+    for name in ("TS_SCALE_WAVES", "TS_BENCH_WAVES"):
         monkeypatch.delenv(name, raising=False)
     cfg = bench.crawl_cfg_for(mode, 16)
     assert isinstance(cfg, CrawlConfig)

@@ -41,11 +41,9 @@ def _golden_trace(res):
     ).reset_index(drop=True)
 
 
-@pytest.mark.parametrize(
-    "budget,use_bloom", [(5, True), (2, False)], ids=["b5_bloom", "b2_exact"]
-)
+@pytest.mark.parametrize("budget", [5, 2], ids=["b5_bloom", "b2_bloom"])
 def test_trace_and_seen_match_golden(
-    spark, tiny_tables, tiny_dir, tmp_store_dir, budget, use_bloom
+    spark, tiny_tables, tiny_dir, tmp_store_dir, budget
 ):
     t = tiny_tables
     gold = refsim.simulate(
@@ -53,7 +51,7 @@ def test_trace_and_seen_match_golden(
         max_waves=3, default_budget=budget,
     )
     cfg = C.CrawlConfig(
-        max_waves=3, default_budget=budget, use_bloom=use_bloom,
+        max_waves=3, default_budget=budget,
         bloom_shards=4, bloom_bits=1 << 14, salt_buckets=4,
         salt_min_frontier_rows=0,  # force the salted phase at tiny scale
     )
@@ -79,18 +77,18 @@ def test_large_tier_trace_and_seen_match_golden(
 ):
     """Third golden axis (SURVEY.md §5.2 item 3 / VERDICT.md r3
     next-round #8): fixtures.LARGE — 600 domains × 60 pages = 36 000
-    pages, ~10× the medium tier. Bloom path only, 2 waves: the tier's
-    job is shard-level load (every one of the 16 shards carries
-    thousands of keys; the data-proportional snapshot widths exercise
-    multi-file writes), not re-proving the exact path the smaller
-    tiers already pin."""
+    pages, ~10× the medium tier. One budget, 2 waves: the tier's job
+    is shard-level load (every one of the 16 shards carries thousands
+    of keys; the data-proportional snapshot widths exercise multi-file
+    writes), not re-proving the budget axis the smaller tiers already
+    pin."""
     t = large_tables
     gold = refsim.simulate(
         t["pagestore"], t["seeds"], t["robots"], t["politeness"],
         max_waves=2, default_budget=5,
     )
     cfg = C.CrawlConfig(
-        max_waves=2, default_budget=5, use_bloom=True,
+        max_waves=2, default_budget=5,
         bloom_shards=16, bloom_bits=1 << 17, salt_buckets=4,
         salt_min_frontier_rows=0,  # force the salted phase at this scale
         state_rows_per_file=2_000,  # force multi-file snapshot writes
@@ -148,7 +146,7 @@ def test_crawl_with_saturating_bloom_matches_golden(
         max_waves=3, default_budget=5,
     )
     cfg = C.CrawlConfig(
-        max_waves=3, default_budget=5, use_bloom=True,
+        max_waves=3, default_budget=5,
         bloom_shards=4, bloom_bits=64, bloom_k=5,
     )
     store = _run_engine(spark, tiny_dir, tmp_store_dir, cfg)
@@ -174,7 +172,7 @@ def test_metrics_match_golden_wave_stats(
         max_waves=3, default_budget=5,
     )
     cfg = C.CrawlConfig(
-        max_waves=3, default_budget=5, use_bloom=True,
+        max_waves=3, default_budget=5,
         bloom_shards=4, bloom_bits=1 << 14,
     )
     store = _run_engine(spark, tiny_dir, tmp_store_dir, cfg)
@@ -260,7 +258,7 @@ def test_image_invariants_on_fetched_pages(spark, tiny_dir, tmp_store_dir):
     """Every successfully fetched page passes the per-row invariant
     (decode ok, PSNR≥40dB lossy / bit-exact lossless, phash match,
     caption equality — BASELINE.json:15)."""
-    cfg = C.CrawlConfig(max_waves=2, use_bloom=False)
+    cfg = C.CrawlConfig(max_waves=2)
     store = _run_engine(spark, tiny_dir, tmp_store_dir, cfg)
     pages = C.read_pages(spark, store).filter(F.col("status") == 200)
     n = pages.count()
@@ -283,7 +281,7 @@ def test_trace_invariant_across_parallelism(spark, tiny_dir, tmp_store_dir):
     import os
 
     cfg = C.CrawlConfig(
-        max_waves=3, use_bloom=True, bloom_shards=4, bloom_bits=1 << 14
+        max_waves=3, bloom_shards=4, bloom_bits=1 << 14
     )
     orig = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -333,7 +331,7 @@ def test_synthetic_fetcher_matches_store_join(
     from torscrapper_spark.operators.fetch import SyntheticPagestore
 
     cfg = C.CrawlConfig(
-        max_waves=3, use_bloom=True, bloom_shards=4, bloom_bits=1 << 14
+        max_waves=3, bloom_shards=4, bloom_bits=1 << 14
     )
     join_store = _run_engine(spark, tiny_dir, tmp_store_dir, cfg)
 
@@ -367,11 +365,9 @@ def test_synthetic_fetcher_matches_store_join(
     assert j_seen == s_seen
 
 
-@pytest.mark.parametrize(
-    "budget,use_bloom", [(5, True), (2, False)], ids=["b5_bloom", "b2_exact"]
-)
+@pytest.mark.parametrize("budget", [5, 2], ids=["b5_bloom", "b2_bloom"])
 def test_medium_tier_trace_and_seen_match_golden(
-    spark, medium_tables, medium_dir, tmp_store_dir, budget, use_bloom
+    spark, medium_tables, medium_dir, tmp_store_dir, budget
 ):
     """SURVEY.md §5.2 item 3 / VERDICT.md r2 next-round #6: the golden
     matrix's middle tier — fixtures.MEDIUM (150 domains × 40 pages =
@@ -386,7 +382,7 @@ def test_medium_tier_trace_and_seen_match_golden(
         max_waves=2, default_budget=budget,
     )
     cfg = C.CrawlConfig(
-        max_waves=2, default_budget=budget, use_bloom=use_bloom,
+        max_waves=2, default_budget=budget,
         bloom_shards=8, bloom_bits=1 << 16, salt_buckets=4,
         salt_min_frontier_rows=0,  # force the salted phase at this scale
     )

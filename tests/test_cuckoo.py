@@ -53,7 +53,7 @@ def test_cuckoo_crawl_matches_golden_and_bloom(
     C.run_crawl(
         spark, cuckoo_store, ps, seeds, robots, pol,
         C.CrawlConfig(
-            max_waves=3, default_budget=5, use_bloom=True,
+            max_waves=3, default_budget=5,
             seen_filter="cuckoo", bloom_shards=4, cuckoo_buckets=1 << 10,
         ),
     )
@@ -67,7 +67,7 @@ def test_cuckoo_crawl_matches_golden_and_bloom(
         C.run_crawl(
             spark, bloom_store, ps, seeds, robots, pol,
             C.CrawlConfig(
-                max_waves=3, default_budget=5, use_bloom=True,
+                max_waves=3, default_budget=5,
                 seen_filter="bloom", bloom_shards=4, bloom_bits=1 << 14,
             ),
         )
@@ -323,7 +323,7 @@ def test_cuckoo_saturation_guard_rebuilds(spark, tiny_tables, tiny_dir,
         spark.read.parquet(f"{tiny_dir}/robots.parquet"),
         spark.read.parquet(f"{tiny_dir}/politeness.parquet"),
         C.CrawlConfig(
-            max_waves=3, default_budget=5, use_bloom=True,
+            max_waves=3, default_budget=5,
             seen_filter="cuckoo", bloom_shards=4, cuckoo_buckets=8,
         ),
     )

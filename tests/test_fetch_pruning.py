@@ -96,7 +96,7 @@ def test_crawl_trace_identical_on_bucketed_store(spark, tiny_dir):
             .select("wave", "seq", "url", "depth", "status").toPandas()
         )
 
-    base_cfg = dict(max_waves=2, use_bloom=True, bloom_shards=4,
+    base_cfg = dict(max_waves=2, bloom_shards=4,
                     bloom_bits=1 << 14)
     flat = run(
         C.load_pagestore(spark, f"{tiny_dir}/pagestore.parquet"),

@@ -65,7 +65,7 @@ def test_steady_wave_write_and_job_floor(spark, tiny_dir):
             spark.read.parquet(f"{tiny_dir}/robots.parquet"),
             spark.read.parquet(f"{tiny_dir}/politeness.parquet"),
             C.CrawlConfig(
-                max_waves=3, use_bloom=True, bloom_shards=4,
+                max_waves=3, bloom_shards=4,
                 bloom_bits=1 << 14,
             ),
         )

@@ -329,3 +329,37 @@ def test_grow_bloom_keeps_empty_saturated_shard(spark):
     row = out[out["pid"] == 1].iloc[0]
     assert bytes(row.bitmap) == empty_bm  # rebuilt fresh-empty
     assert int(row.nbits) == nbits and int(row.k) == 3
+
+
+def test_empty_filters_are_built_on_the_executors(spark):
+    """The wave-0 bloom and cuckoo tables are generated over
+    ``spark.range`` on the executors: a driver-side frame is a
+    LocalTableScan that serializes every zeroed shard into its tasks
+    (~1 MB per task at 16 shards × 2^21 bits). The rows stay one zeroed
+    shard per pid with the configured sizes."""
+    from torscrapper_spark.operators import cuckoo
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    bloom = seen_op.empty_bloom(spark, 16, 1 << 21, 5)
+    assert "LocalTableScan" not in plan(bloom)
+    assert bloom.schema.simpleString() == (
+        "struct<pid:int,bitmap:binary,nbits:int,k:int>"
+    )
+    rows = bloom.collect()
+    assert sorted(r.pid for r in rows) == list(range(16))
+    for r in rows:
+        assert bytes(r.bitmap) == bytes(1 << 18)
+        assert (r.nbits, r.k) == (1 << 21, 5)
+
+    cf = cuckoo.empty_cuckoo(spark, 8, 1 << 12)
+    assert "LocalTableScan" not in plan(cf)
+    assert cf.schema.simpleString() == (
+        "struct<pid:int,table:binary,nbuckets:int,degraded:boolean>"
+    )
+    rows = cf.collect()
+    assert sorted(r.pid for r in rows) == list(range(8))
+    for r in rows:
+        assert bytes(r.table) == bytes((1 << 12) * 4 * 2)
+        assert (r.nbuckets, r.degraded) == (1 << 12, False)

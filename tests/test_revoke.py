@@ -45,7 +45,7 @@ def _trace(spark, store):
 
 def _cfg(**kw):
     base = dict(
-        max_waves=3, default_budget=5, use_bloom=True,
+        max_waves=3, default_budget=5,
         seen_filter="cuckoo", bloom_shards=4, cuckoo_buckets=1 << 10,
         bloom_bits=1 << 14,
     )
@@ -545,7 +545,7 @@ def test_zeroed_like_preserves_grown_nbits(spark):
         "k": pd.Series([3, 3, 3], dtype="int32"),
     })
     bloom = spark.createDataFrame(rows, S.BLOOM_SCHEMA)
-    z = {r.pid: r for r in S.zeroed_like(spark, bloom).collect()}
+    z = {r.pid: r for r in S.zeroed_like(bloom).collect()}
     assert [z[p].nbits for p in (0, 1, 2)] == [1024, 2048, 1024]
     assert all(z[p].k == 3 for p in (0, 1, 2))
     for p in (0, 1, 2):

@@ -51,7 +51,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .seen import rebuild_saturated, saturated_shard_keys, with_pid
+from .seen import (
+    per_shard, rebuild_saturated, saturated_shard_keys, with_pid,
+)
 
 CUCKOO_SCHEMA = "pid int, table binary, nbuckets int, degraded boolean"
 
@@ -190,13 +192,10 @@ def _delete(tab: np.ndarray, nbuckets: int, h: np.ndarray) -> None:
 
 def empty_cuckoo(spark, num_shards: int, nbuckets: int) -> DataFrame:
     assert nbuckets & (nbuckets - 1) == 0, "nbuckets must be a power of 2"
-    pdf = pd.DataFrame({
-        "pid": np.arange(num_shards, dtype="int32"),
-        "table": [bytes(nbuckets * _SLOTS * 2)] * num_shards,
-        "nbuckets": np.full(num_shards, nbuckets, dtype="int32"),
-        "degraded": np.zeros(num_shards, dtype=bool),
+    return per_shard(spark, num_shards, CUCKOO_SCHEMA, lambda: {
+        "table": bytes(nbuckets * _SLOTS * 2), "nbuckets": nbuckets,
+        "degraded": False,
     })
-    return spark.createDataFrame(pdf, CUCKOO_SCHEMA)
 
 
 def update_cuckoo(filt: DataFrame, delta: DataFrame, num_shards: int

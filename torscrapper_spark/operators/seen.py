@@ -58,17 +58,28 @@ def _test_bits(bitmap: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return got.all(axis=0)
 
 
+def per_shard(spark, num_shards: int, schema: str, row) -> DataFrame:
+    """One row per shard pid, its other columns the dict ``row()``
+    returns, generated on the executors over ``spark.range``: a
+    driver-side frame would ship every zeroed shard inside its scan
+    tasks (and a literal projection is constant-folded into a plan
+    literal that every task carries)."""
+    def rows(batches):
+        for b in batches:
+            yield pd.DataFrame(
+                {"pid": b["id"], **{c: [v] * len(b) for c, v in row().items()}}
+            )
+
+    return spark.range(num_shards).mapInPandas(rows, schema)
+
+
 def empty_bloom(spark, num_shards: int, nbits: int, k: int) -> DataFrame:
-    pdf = pd.DataFrame({
-        "pid": np.arange(num_shards, dtype="int32"),
-        "bitmap": [bytes(nbits // 8)] * num_shards,
-        "nbits": np.full(num_shards, nbits, dtype="int32"),
-        "k": np.full(num_shards, k, dtype="int32"),
+    return per_shard(spark, num_shards, BLOOM_SCHEMA, lambda: {
+        "bitmap": bytes(nbits // 8), "nbits": nbits, "k": k,
     })
-    return spark.createDataFrame(pdf, BLOOM_SCHEMA)
 
 
-def zeroed_like(spark, bloom: DataFrame) -> DataFrame:
+def zeroed_like(bloom: DataFrame) -> DataFrame:
     """Empty bitmaps PRESERVING each shard's (possibly grown) nbits/k.
 
     The forget-mode bloom rebuild (plans/crawl.py ``revoke_urls``) must
@@ -76,19 +87,15 @@ def zeroed_like(spark, bloom: DataFrame) -> DataFrame:
     to the configured size — re-inserting the full seen set into
     undersized bitmaps would drive their fill toward 1.0 and send nearly
     every probe to the exact residual until the next wave's saturation
-    guard re-grows them. Shard meta is (pid, nbits, k) — tiny regardless
-    of bitmap bytes, so the driver-side collect is bounded the same way
-    the saturation guard's stats collect is.
+    guard re-grows them. A projection over the bloom's own (pid, nbits,
+    k): the zero bytes are sized by each row's nbits on the executors,
+    and nothing is collected to the driver.
     """
-    meta = bloom.select("pid", "nbits", "k").toPandas()
-    return spark.createDataFrame(
-        pd.DataFrame({
-            "pid": meta["pid"].astype("int32"),
-            "bitmap": [bytes(int(n) // 8) for n in meta["nbits"]],
-            "nbits": meta["nbits"].astype("int32"),
-            "k": meta["k"].astype("int32"),
-        }),
-        BLOOM_SCHEMA,
+    return bloom.select(
+        "pid",
+        F.expr("cast(repeat(char(0), nbits div 8) as binary)").alias("bitmap"),
+        "nbits",
+        "k",
     )
 
 

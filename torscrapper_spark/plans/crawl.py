@@ -60,7 +60,6 @@ from ..operators.cuckoo import (
 )
 from ..operators.seen import (
     empty_bloom,
-    exact_new,
     grow_saturated_shards,
     new_candidates,
     probe_bloom,
@@ -144,16 +143,14 @@ def read_metrics(spark: SparkSession, store: "SnapshotStore") -> DataFrame:
 class CrawlConfig:
     max_waves: int = 8
     default_budget: int = DEFAULT_BUDGET
-    use_bloom: bool = True
     bloom_shards: int = 8
     bloom_bits: int = 1 << 16     # per shard; size for ~14 bits/key at scale
     bloom_k: int = 5
-    # which probabilistic prefilter backs the seen check when use_bloom
-    # is on: "bloom" (operators/seen.py) or "cuckoo" (operators/
-    # cuckoo.py — adds deletion for seed revocation; BASELINE.json:6
-    # "partitioned cuckoo/bloom"). Same pid sharding, same exact
-    # residual, same snapshot lifecycle; the state table is named after
-    # the filter.
+    # which probabilistic prefilter backs the seen check: "bloom"
+    # (operators/seen.py) or "cuckoo" (operators/cuckoo.py — adds
+    # deletion for seed revocation; BASELINE.json:6 "partitioned
+    # cuckoo/bloom"). Same pid sharding, same exact residual, same
+    # snapshot lifecycle; the state table is named after the filter.
     seen_filter: str = "bloom"
     cuckoo_buckets: int = 1 << 12  # per shard; 4 slots each
     salt_buckets: int = 0         # >1 enables two-phase budget top-k
@@ -201,22 +198,6 @@ class CrawlConfig:
     # only ever reads the last committed wave. None = keep all (full
     # time travel).
     retain_state_snapshots: int | None = None
-    # Frontier representation. "full" (default): every wave writes the
-    # complete next frontier — simple, but the write is O(|frontier|)
-    # per wave, which at a 10^10-URL frontier rewrites ~TBs every wave
-    # while the wave's real work is budget-bounded. "delta": each wave
-    # writes ONLY its changes — the selected rows as tombstones plus
-    # the robots-gated inserts, O(wave) rows — and reads resolve the
-    # chain (live inserts anti-join tombstones; see
-    # :func:`_resolve_frontier_chain` for why the resolution needs no
-    # version ordering). Requires ``compact_every``: compaction folds
-    # the chain into a base (SnapshotStore.compact with the resolver
-    # transform), which bounds both the read fan-in and the tombstone
-    # anti-join's broadcast side at O(compact_every × wave). Traces are
-    # bit-identical across modes (tests/test_frontier_delta.py); the
-    # default stays "full" so existing goldens and the frozen scaling
-    # protocol are untouched.
-    frontier_mode: str = "full"
 
 
 def _file_width(rows: int, cfg: "CrawlConfig") -> int:
@@ -225,66 +206,15 @@ def _file_width(rows: int, cfg: "CrawlConfig") -> int:
                // cfg.state_rows_per_file)
 
 
-def _resolve_frontier_chain(chain: DataFrame) -> DataFrame:
-    """Live frontier rows from a delta chain (``frontier_mode="delta"``).
-
-    The chain holds insert rows (``tombstone=false``, full FRONTIER_COLS)
-    and tombstone rows (``tombstone=true``, written for every selected
-    URL when its wave fetches it). Resolution is an ORDER-FREE anti-join
-    — no version ordering, no window — which is valid because the crawl
-    maintains "at most one live insert and at most one tombstone per
-    url_hash, tombstone logically after its insert":
-
-    * an insert requires the URL to be absent from ``seen`` (exact
-      anti-join), and every frontier row is in ``seen`` from the moment
-      it is queued (``frontier ⊆ seen``), so a tombstoned key — which
-      stays in ``seen`` — can never be re-inserted by the crawl;
-    * :func:`revoke_urls` is the only path that removes keys from
-      ``seen`` (making them re-discoverable) or re-queues fetched keys
-      (reseed), and in delta mode it ALWAYS compacts the chain first,
-      stripping every tombstone that could shadow the later re-insert.
-
-    The tombstone side is broadcast: compaction (required in delta
-    mode) bounds it at O(compact_every × per-wave budget) keys.
-    Used both for per-wave reads and as the compaction transform (the
-    output keeps the ``tombstone`` column, all-false, matching the
-    table's schema sidecar)."""
-    tombs = chain.filter(F.col("tombstone")).select("url_hash")
-    return chain.filter(~F.col("tombstone")).join(
-        F.broadcast(tombs), "url_hash", "left_anti"
-    )
-
-
-def _read_frontier(
-    spark: SparkSession, store: SnapshotStore, cfg: "CrawlConfig", wave: int
-) -> DataFrame:
-    """The live frontier as of ``wave`` under either representation."""
-    if cfg.frontier_mode != "delta":
-        return store.read(spark, "frontier", wave)
-    return _resolve_frontier_chain(
-        store.read_upto(spark, "frontier", wave)
-    ).drop("tombstone")
-
-
-def _obs_count(obs, cached_df: DataFrame, name: str = "n") -> int:
-    """Observation count with an AQE-empty-pruning fallback.
-
-    Observations filled by a collect/count ACTION (unlike the
-    observe-riding-write pattern, which always executes its full plan —
-    verified empirically) can hit a Spark edge: when the observed input
-    is empty behind a shuffle, AQE's empty-relation propagation prunes
-    the stage carrying the CollectMetrics node, the metrics accumulator
-    never updates, and the JVM Observation hands back a schemaless
-    ``Row.empty`` that ``Observation.get`` cannot convert
-    (``PythonSQLUtils.toPyRow`` asserts ``GenericRowWithSchema``). The
-    fallback counts the warm cache — near-free precisely in the empty
-    case that triggers it."""
-    from py4j.protocol import Py4JJavaError
-
-    try:
-        return int(obs.get[name])
-    except Py4JJavaError:
-        return cached_df.count()
+def _filter_width(cfg: "CrawlConfig") -> int:
+    """Filter-snapshot write width: ~64 MB files by the configured shard
+    BYTES (bloom: nbits/8 per shard; cuckoo: 4 two-byte slots per
+    bucket), not by the merge or delete's shuffle width."""
+    if cfg.seen_filter == "cuckoo":
+        shard_bytes = cfg.bloom_shards * cfg.cuckoo_buckets * 8
+    else:
+        shard_bytes = cfg.bloom_shards * (cfg.bloom_bits // 8)
+    return max(1, shard_bytes // (64 << 20))
 
 
 def load_pagestore(
@@ -366,27 +296,21 @@ def init_state(
         cfg.bloom_shards,
     ).repartition(min(cfg.bloom_shards, max(width, 1)), "pid")
     frontier0 = robots_gate(canon, robots).select(*FRONTIER_COLS)
-    if cfg.frontier_mode == "delta":
-        frontier0 = frontier0.withColumn("tombstone", F.lit(False))
     store.write(frontier0.repartition(width), "frontier", 0)
     store.write(seen0, "seen", 0, partition_by="pid")
-    if cfg.use_bloom:
-        if cfg.seen_filter == "cuckoo":
-            flt0 = update_cuckoo(
-                empty_cuckoo(spark, cfg.bloom_shards, cfg.cuckoo_buckets),
-                store.read(spark, "seen", 0),
-                cfg.bloom_shards,
-            )
-            store.write(flt0, "cuckoo", 0)
-        else:
-            bloom0 = update_bloom(
-                empty_bloom(
-                    spark, cfg.bloom_shards, cfg.bloom_bits, cfg.bloom_k
-                ),
-                store.read(spark, "seen", 0),
-                cfg.bloom_shards,
-            )
-            store.write(bloom0, "bloom", 0)
+    if cfg.seen_filter == "cuckoo":
+        flt0 = update_cuckoo(
+            empty_cuckoo(spark, cfg.bloom_shards, cfg.cuckoo_buckets),
+            store.read(spark, "seen", 0),
+            cfg.bloom_shards,
+        )
+    else:
+        flt0 = update_bloom(
+            empty_bloom(spark, cfg.bloom_shards, cfg.bloom_bits, cfg.bloom_k),
+            store.read(spark, "seen", 0),
+            cfg.bloom_shards,
+        )
+    store.write(flt0, cfg.seen_filter, 0)
     n_frontier = store.read(spark, "frontier", 0).count()
     n_seen = store.read(spark, "seen", 0).count()
     canon.unpersist()
@@ -424,14 +348,12 @@ def run_wave(
         # (VERDICT.md r2 next-round #8)
         _marks.append((label, time.time()))
 
-    frontier = _read_frontier(spark, store, cfg, wave)
+    frontier = store.read(spark, "frontier", wave)
     seen = store.read_upto(spark, "seen", wave)
     # `flt` is whichever probabilistic prefilter the config selected
     # (bloom bitmaps or cuckoo fingerprint tables — same pid sharding,
     # same snapshot lifecycle, state table named after the filter)
-    flt = (
-        store.read(spark, cfg.seen_filter, wave) if cfg.use_bloom else None
-    )
+    flt = store.read(spark, cfg.seen_filter, wave)
 
     # salted phase-1 gate + data-proportional window width (see
     # salt_min_frontier_rows and SELECT_ROWS_PER_TASK); both are pure
@@ -455,16 +377,6 @@ def run_wave(
             "bucket",
             F.pmod(F.col("url_hash"), F.lit(cfg.pagestore_buckets)).cast("int"),
         )
-    sel_obs = None
-    if cfg.frontier_mode == "delta":
-        # rides the wave's single materialize action (the probe/seen
-        # pipeline scans `selected` exactly once to fill the caches), so
-        # the selected-row count is known driver-side by the time
-        # job_frontier sizes its delta write — zero extra jobs
-        from pyspark.sql import Observation
-
-        sel_obs = Observation()
-        selected = selected.observe(sel_obs, F.count(F.lit(1)).alias("n"))
     selected = selected.persist()
     mark("budget_select")
 
@@ -518,24 +430,16 @@ def run_wave(
     candidates = extract_candidates(
         validated.filter(F.col("status") == 200), next_wave=wave + 1
     )
-    if cfg.use_bloom:
-        # the shared production path (operators/seen.py::new_candidates
-        # — the same code the pruning tests assert on): probe → persist
-        # → distinct-pid collect (fills the cache) → pruned exact
-        # residual. The probe fn is injected per the config's filter.
-        new, probe_cache = new_candidates(
-            candidates, seen, flt, cfg.bloom_shards, use_bloom=True,
-            probe_fn=(
-                probe_cuckoo if cfg.seen_filter == "cuckoo"
-                else probe_bloom
-            ),
-        )
-    else:
-        # exact path: no probe stage — the first action over the
-        # caches is job_seen's write itself (fetch span folds into
-        # state_chain; tests-only path)
-        probe_cache = None
-        new = exact_new(candidates, seen)
+    # the shared production path (operators/seen.py::new_candidates —
+    # the same code the pruning tests assert on): probe → persist →
+    # distinct-pid collect (fills the cache) → pruned exact residual.
+    # The probe fn is injected per the config's filter.
+    new, probe_cache = new_candidates(
+        candidates, seen, flt, cfg.bloom_shards, use_bloom=True,
+        probe_fn=(
+            probe_cuckoo if cfg.seen_filter == "cuckoo" else probe_bloom
+        ),
+    )
     new = new.persist()
     mark("fetch_validate")
 
@@ -624,52 +528,8 @@ def run_wave(
 
     frontier_counts: dict[str, int] = {}
 
-    def job_frontier_delta(inserts):
-        # frontier_mode="delta": write ONLY the wave's changes — every
-        # selected row as a tombstone (it leaves the frontier whether
-        # its fetch succeeded or 404'd, exactly the full-mode anti-join
-        # semantics) plus the robots-gated inserts. O(wave) rows and
-        # files instead of full mode's O(|frontier|) rewrite; reads
-        # resolve the chain (:func:`_resolve_frontier_chain`) and
-        # run_crawl's compaction keeps the chain and the tombstone
-        # broadcast bounded. Tombstones carry the full selected row, so
-        # the salted (domain, _salt) repartition spreads hot domains
-        # across files for BOTH row kinds (A17).
-        obs = Observation()
-        # filled by the materialize action (pos_pids collect / job_seen
-        # write); falls back to the warm cache if AQE pruned the node
-        n_sel = _obs_count(sel_obs, selected)
-        width = _file_width(n_sel + new_counts["n"], cfg)
-        delta = (
-            selected.select(*FRONTIER_COLS)
-            .withColumn("tombstone", F.lit(True))
-            .unionByName(inserts.withColumn("tombstone", F.lit(False)))
-            .withColumn(
-                "_salt",
-                F.pmod(F.xxhash64("url"), F.lit(FRONTIER_SALT)).cast("int"),
-            )
-            .repartition(width, "domain", "_salt")
-            .drop("_salt")
-            # exact live count, riding the write: prev − tombstones +
-            # inserts (frontier rows are unique per url_hash — inserts
-            # are anti-joined against seen and frontier ⊆ seen — so the
-            # arithmetic is exact, matching full mode's observed count)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("tombstone").cast("long")).alias("nt"),
-            )
-        )
-        store.write(delta, "frontier", wave + 1)
-        n_rows, n_tomb = int(obs.get["n"]), int(obs.get["nt"] or 0)
-        frontier_counts["n"] = (
-            int(prev_frontier_count) - n_tomb + (n_rows - n_tomb)
-        )
-
     def job_frontier():
         inserts = robots_gate(new, robots).select(*FRONTIER_COLS)
-        if cfg.frontier_mode == "delta":
-            return job_frontier_delta(inserts)
         # frontier_{w+1}: remaining ∪ robots-allowed new links, salted
         # repartition on (domain, salt) → hot domains spread over tasks (A17)
         # broadcast the (politeness-bounded) selected keys so the
@@ -723,9 +583,7 @@ def run_wave(
             )
         else:
             final = upd
-        shard_bytes = cfg.bloom_shards * cfg.cuckoo_buckets * 8
-        width = max(1, shard_bytes // (64 << 20))
-        store.write(final.repartition(width), "cuckoo", wave + 1)
+        store.write(final.repartition(_filter_width(cfg)), "cuckoo", wave + 1)
         if guarded:
             upd.unpersist()
             # the saturation rebuild caches its key scan so the
@@ -767,12 +625,11 @@ def run_wave(
             )
         else:
             bloom_final = bloom_upd
-        # bound the snapshot's file count by bitmap BYTES (shards rows of
-        # nbits/8 each): the cogroup merge runs at shuffle width, but the
-        # write needs ~64 MB files, not one file per merge task
-        shard_bytes = cfg.bloom_shards * (cfg.bloom_bits // 8)
-        bloom_width = max(1, shard_bytes // (64 << 20))
-        store.write(bloom_final.repartition(bloom_width), "bloom", wave + 1)
+        # the cogroup merge runs at shuffle width, but the write needs
+        # ~64 MB files, not one file per merge task
+        store.write(
+            bloom_final.repartition(_filter_width(cfg)), "bloom", wave + 1
+        )
         if guarded:
             # unpersist whenever the guard persisted, INCLUDING the
             # no-saturation path where bloom_final IS bloom_upd — the
@@ -793,20 +650,16 @@ def run_wave(
     # cache. Launching all three cold would race each job into
     # recomputing the probe pipeline's broadcast inputs.
     job_seen()
-    dependents = [job_frontier]
-    if cfg.use_bloom:
-        dependents.append(
-            job_filter_cuckoo if cfg.seen_filter == "cuckoo"
-            else job_filter_bloom
-        )
-    _run_concurrently(dependents)
+    _run_concurrently([
+        job_frontier,
+        job_filter_cuckoo if cfg.seen_filter == "cuckoo" else job_filter_bloom,
+    ])
     n_new = new_counts["n"]
     mark("state_chain")
 
     selected.unpersist()
     new.unpersist()
-    if probe_cache is not None:
-        probe_cache.unpersist()
+    probe_cache.unpersist()
     info = {
         "frontier_count": frontier_counts["n"],
         "seen_total": int(prev_seen_total) + n_new,
@@ -870,16 +723,6 @@ def run_crawl(
                 f"{dup[0]['domain']!r}; dimension tables must be unique "
                 "per domain (the reference keeps one entry per domain)"
             )
-    if cfg.frontier_mode == "delta" and cfg.compact_every is None:
-        # without compaction the delta chain — and with it the tombstone
-        # set the per-wave resolution BROADCASTS — grows with every wave
-        # fetched; the mode's O(wave) write cost is only honest with the
-        # read side bounded too
-        raise ValueError(
-            'frontier_mode="delta" requires compact_every (the chain '
-            "resolution broadcasts the un-compacted tombstones; "
-            "compaction bounds them at O(compact_every × wave))"
-        )
     if store.last_wave() is None:
         init_state(spark, store, seeds, robots, cfg)
     wave = store.last_wave()
@@ -904,14 +747,9 @@ def run_crawl(
         # last_wave() smaller, i.e. the deletion floor conservative
         if cfg.retain_state_snapshots is None:
             return
-        # delta-mode frontier dirs carry LIVE rows (the chain IS the
-        # state) — they are expired by compaction, never by the
-        # state-snapshot window
-        tables = [] if cfg.frontier_mode == "delta" else ["frontier"]
-        if cfg.use_bloom:
-            tables.append(cfg.seen_filter)
-        if tables:
-            store.expire_state_snapshots(tables, cfg.retain_state_snapshots)
+        store.expire_state_snapshots(
+            ["frontier", cfg.seen_filter], cfg.retain_state_snapshots
+        )
 
     try:
         while wave < cfg.max_waves:
@@ -933,26 +771,6 @@ def run_crawl(
                     pending.pop(0).result()
                 store.compact(
                     spark, "seen", wave, width=_file_width(seen_total, cfg)
-                )
-            if (
-                cfg.frontier_mode == "delta"
-                and cfg.compact_every is not None
-                and store.delta_dirs_above_base("frontier", wave)
-                >= cfg.compact_every
-            ):
-                # same drained-maintenance point: fold the frontier
-                # delta chain into a base of live rows (the resolver IS
-                # the transform — tombstones and the rows they killed
-                # vanish), keeping reads at base + O(compact_every)
-                # deltas and the resolution's broadcast side bounded
-                while pending:
-                    pending.pop(0).result()
-                store.compact(
-                    spark,
-                    "frontier",
-                    wave,
-                    width=_file_width(frontier_count, cfg),
-                    transform=_resolve_frontier_chain,
                 )
             expire_states()
             t0 = time.time()
@@ -1122,7 +940,7 @@ def revoke_urls(
         .select("url_hash").distinct().collect()
     }
     n_rev = len(in_seen)
-    frontier = _read_frontier(spark, store, cfg, w)
+    frontier = store.read(spark, "frontier", w)
     if n_rev == 0:
         # Nothing in seen: EITHER a true no-op (unknown URLs) OR the
         # repair half of a crashed forget run — the seen compaction's
@@ -1155,10 +973,9 @@ def revoke_urls(
         # the crash may also have preceded the filter's w+1 write; carry
         # wave w's filter forward (stale fingerprints are mere false
         # positives — the exact residual decides)
-        if cfg.use_bloom:
-            store.write(
-                store.read(spark, cfg.seen_filter, w), cfg.seen_filter, w + 1
-            )
+        store.write(
+            store.read(spark, cfg.seen_filter, w), cfg.seen_filter, w + 1
+        )
         seen_total = seen.count()  # manifest w's count predates the crash
         out: dict = {"revoked": 0, "repaired": int(queued_n), "wave": w + 1}
         return _publish_revocation(
@@ -1200,10 +1017,9 @@ def revoke_urls(
             re_rows.select(*FRONTIER_COLS)
         )
         seen_total = int(manifest["seen_total"])
-        if cfg.use_bloom:
-            store.write(
-                store.read(spark, cfg.seen_filter, w), cfg.seen_filter, w + 1
-            )
+        store.write(
+            store.read(spark, cfg.seen_filter, w), cfg.seen_filter, w + 1
+        )
     else:
         # forget = as if never discovered: a revoked URL still queued
         # leaves the frontier in the same step it leaves seen, else the
@@ -1228,35 +1044,24 @@ def revoke_urls(
         # deduped), so the post-revocation count is exactly derivable —
         # no third full scan of the 10^10-row table
         seen_total = int(manifest["seen_total"]) - n_rev
-        if cfg.use_bloom:
-            if cfg.seen_filter == "cuckoo":
-                flt = delete_cuckoo(
-                    store.read(spark, "cuckoo", w), rev, cfg.bloom_shards
-                )
-                # file count bounded by shard BYTES, not the delete's
-                # shuffle width (the job_filter_cuckoo write rule)
-                shard_bytes = cfg.bloom_shards * cfg.cuckoo_buckets * 8
-                store.write(
-                    flt.repartition(max(1, shard_bytes // (64 << 20))),
-                    "cuckoo", w + 1,
-                )
-            else:
-                # rebuild seeded from zeroed-out copies of wave w's
-                # shards so saturation-grown nbits survive revocation —
-                # resetting to cfg.bloom_bits would re-pack the full
-                # seen set into undersized bitmaps and push their fill
-                # toward 1.0 (every probe → exact residual) until the
-                # next saturation rebuild
-                flt = update_bloom(
-                    zeroed_like(spark, store.read(spark, "bloom", w)),
-                    store.read_upto(spark, "seen", w),
-                    cfg.bloom_shards,
-                )
-                shard_bytes = cfg.bloom_shards * (cfg.bloom_bits // 8)
-                store.write(
-                    flt.repartition(max(1, shard_bytes // (64 << 20))),
-                    "bloom", w + 1,
-                )
+        if cfg.seen_filter == "cuckoo":
+            flt = delete_cuckoo(
+                store.read(spark, "cuckoo", w), rev, cfg.bloom_shards
+            )
+        else:
+            # rebuild seeded from zeroed-out copies of wave w's shards so
+            # saturation-grown nbits survive revocation — resetting to
+            # cfg.bloom_bits would re-pack the full seen set into
+            # undersized bitmaps and push their fill toward 1.0 (every
+            # probe → exact residual) until the next saturation rebuild
+            flt = update_bloom(
+                zeroed_like(store.read(spark, "bloom", w)),
+                store.read_upto(spark, "seen", w),
+                cfg.bloom_shards,
+            )
+        store.write(
+            flt.repartition(_filter_width(cfg)), cfg.seen_filter, w + 1
+        )
     return _publish_revocation(
         spark, store, frontier, manifest, w, n_rev, seen_total, reseed, cfg,
         out,
@@ -1279,44 +1084,20 @@ def _publish_revocation(
     (file width sized to the EXPECTED rows — reseed grows the frontier
     by up to ``n_rev``, forget/repair only shrink it), ride the row
     count on the write via ``observe`` (the job_frontier pattern — no
-    second scan of the just-written snapshot), and commit.
-
-    ``frontier_mode="delta"`` publishes by COMPACTING the chain into a
-    base of the revised rows instead of writing a version dir — the one
-    frontier mutation path that must not be a tombstone delta, because
-    forget makes revoked keys re-discoverable and reseed re-queues
-    fetched keys: either way a later insert for the same url_hash is
-    now legal, and an old tombstone left in the chain would shadow it
-    under the order-free resolution (:func:`_resolve_frontier_chain`).
-    Compaction strips every such tombstone in the same atomic step."""
+    second scan of the just-written snapshot), and commit."""
     from pyspark.sql import Observation
 
     width = _file_width(
         int(manifest["frontier_count"]) + (n_rev if reseed else 0), cfg
     )
     obs = Observation()
-    if cfg.frontier_mode == "delta":
-        # the transform ignores the chain argument: `frontier` is the
-        # already-revised resolved view, whose lineage reads the same
-        # delta dirs compact unions — consumed during the base write,
-        # before those dirs are expired (the seen-compaction pattern)
-        out["frontier_compaction"] = store.compact(
-            spark,
-            "frontier",
-            w,
-            width=width,
-            transform=lambda _chain: frontier.select(*FRONTIER_COLS)
-            .withColumn("tombstone", F.lit(False))
-            .observe(obs, F.count(F.lit(1)).alias("n")),
-        )
-    else:
-        store.write(
-            frontier.select(*FRONTIER_COLS)
-            .repartition(width)
-            .observe(obs, F.count(F.lit(1)).alias("n")),
-            "frontier",
-            w + 1,
-        )
+    store.write(
+        frontier.select(*FRONTIER_COLS)
+        .repartition(width)
+        .observe(obs, F.count(F.lit(1)).alias("n")),
+        "frontier",
+        w + 1,
+    )
     n_frontier = int(obs.get["n"])
     store.commit(
         w + 1,

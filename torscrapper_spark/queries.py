@@ -1717,7 +1717,7 @@ def crawl_trace_from_documents(spark, sf, max_waves=2):
                 spark.read.parquet(f"{tmp}/seeds.parquet"),
                 spark.read.parquet(f"{tmp}/robots.parquet"),
                 spark.read.parquet(f"{tmp}/politeness.parquet"),
-                C.CrawlConfig(max_waves=max_waves, use_bloom=True,
+                C.CrawlConfig(max_waves=max_waves,
                               bloom_shards=4, bloom_bits=1 << 14),
             )
         except BaseException:
