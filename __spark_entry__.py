@@ -29,7 +29,7 @@ from torscrapper_spark.queries import crawl_trace_from_documents, registry  # no
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: a full crawl (canonicalize → robots gate → politeness
-    budget → priority order → bloom/anti-join seen filter → fetch →
+    budget → priority order → cuckoo/anti-join seen filter → fetch →
     decode/validate → link extraction → snapshot checkpoint) over a
     deterministic synthetic onion graph sized from the sf0.001
     documents table; returns the crawl trace."""

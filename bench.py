@@ -146,14 +146,16 @@ def crawl_cfg_for(mode: str, pagestore_buckets: int):
         return CrawlConfig(
             max_waves=_env_int("TS_SCALE_WAVES", 4),
             default_budget=_env_int("TS_SCALE_BUDGET", 128),
-            bloom_shards=64, bloom_bits=1 << 19, bloom_k=5,
+            # seen ≤ 2 × 500k (pages + dangling targets): load ≤ 0.48
+            bloom_shards=64, cuckoo_buckets=1 << 13,
             salt_buckets=8,
             pagestore_buckets=pagestore_buckets,
         )
     return CrawlConfig(
         max_waves=_env_int("TS_BENCH_WAVES", 4),
         default_budget=_env_int("TS_BENCH_BUDGET", 8),
-        bloom_shards=16, bloom_bits=1 << 21, bloom_k=5,
+        # seen ≤ 2 × 400k (pages + dangling targets): load ≤ 0.39
+        bloom_shards=16, cuckoo_buckets=1 << 15,
         salt_buckets=0, pagestore_buckets=pagestore_buckets,
     )
 
@@ -255,7 +257,7 @@ def warmup_crawl(spark, synthetic: bool = False, like=None) -> None:
     else:
         ps = C.load_pagestore(spark, f"{tmp}/pagestore.parquet")
     cfg = C.CrawlConfig(max_waves=2, default_budget=8,
-                        bloom_shards=4, bloom_bits=1 << 14, bloom_k=5)
+                        bloom_shards=4, cuckoo_buckets=1 << 10)
     C.run_crawl(
         spark,
         SnapshotStore(os.path.join(tmp, "snap")),
@@ -383,19 +385,17 @@ def package_zip() -> str:
 def submit_leg_cmd(n: int, out: str, zip_path: str, stage: str) -> list:
     """spark-submit invocation for one `--one` scaling leg, with the
     driver script STAGED OUTSIDE the repo (the package import can only
-    resolve from the shipped zip). --driver-memory/--driver-java-options
-    must be CLI flags: under spark-submit the driver JVM is up before
-    any in-session conf is read. The heap is small and fully
-    pretouched: the payload lives in the Python workers, not the JVM,
-    and a growing heap injects page-fault stalls into early waves."""
+    resolve from the shipped zip). --driver-memory must be a CLI flag:
+    under spark-submit the driver JVM is up before any in-session conf
+    is read. It caps the heap without committing it: the payload lives
+    in the Python workers, not the JVM, and each leg's untimed warm-up
+    crawl grows the heap before the timed one."""
     script = os.path.join(stage, "bench_submit.py")
     shutil.copy(os.path.abspath(__file__), script)
-    mem = "8g"
     return [
         shutil.which("spark-submit") or "spark-submit",
         "--master", f"local[{n}]",
-        "--driver-memory", mem,
-        "--driver-java-options", f"-Xms{mem} -XX:+AlwaysPreTouch",
+        "--driver-memory", "8g",
         "--py-files", zip_path,
         script, "--one", str(n), out,
     ]

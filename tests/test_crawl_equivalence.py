@@ -41,7 +41,7 @@ def _golden_trace(res):
     ).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("budget", [5, 2], ids=["b5_bloom", "b2_bloom"])
+@pytest.mark.parametrize("budget", [5, 2], ids=["b5", "b2"])
 def test_trace_and_seen_match_golden(
     spark, tiny_tables, tiny_dir, tmp_store_dir, budget
 ):
@@ -52,7 +52,7 @@ def test_trace_and_seen_match_golden(
     )
     cfg = C.CrawlConfig(
         max_waves=3, default_budget=budget,
-        bloom_shards=4, bloom_bits=1 << 14, salt_buckets=4,
+        bloom_shards=4, cuckoo_buckets=1 << 10, salt_buckets=4,
         salt_min_frontier_rows=0,  # force the salted phase at tiny scale
     )
     store = _run_engine(spark, tiny_dir, tmp_store_dir, cfg)
@@ -89,7 +89,7 @@ def test_large_tier_trace_and_seen_match_golden(
     )
     cfg = C.CrawlConfig(
         max_waves=2, default_budget=5,
-        bloom_shards=16, bloom_bits=1 << 17, salt_buckets=4,
+        bloom_shards=16, cuckoo_buckets=1 << 11, salt_buckets=4,
         salt_min_frontier_rows=0,  # force the salted phase at this scale
         state_rows_per_file=2_000,  # force multi-file snapshot writes
     )
@@ -129,35 +129,6 @@ def test_large_tier_trace_and_seen_match_golden(
     assert eng_seen == gold_seen
 
 
-def test_crawl_with_saturating_bloom_matches_golden(
-    spark, tiny_tables, tiny_dir, tmp_store_dir
-):
-    """Bloom shards sized absurdly under the crawl's key count (64 bits,
-    k=5, ~40 keys/shard → load ≈ 3, fill → ~0.95 unguarded): the
-    saturation guard must rebuild shards mid-crawl
-    (operators/seen.py::grow_saturated_shards) while the trace stays
-    golden — the guard changes only the prefilter's selectivity, never
-    its semantics."""
-    from torscrapper_spark.operators.seen import bloom_fill
-
-    t = tiny_tables
-    gold = refsim.simulate(
-        t["pagestore"], t["seeds"], t["robots"], t["politeness"],
-        max_waves=3, default_budget=5,
-    )
-    cfg = C.CrawlConfig(
-        max_waves=3, default_budget=5,
-        bloom_shards=4, bloom_bits=64, bloom_k=5,
-    )
-    store = _run_engine(spark, tiny_dir, tmp_store_dir, cfg)
-    assert _engine_trace(spark, store).equals(_golden_trace(gold))
-    fills = bloom_fill(
-        store.read(spark, "bloom", store.last_wave())
-    ).collect()
-    assert any(r.nbits > 64 for r in fills), fills
-    assert all(r.set_bits <= 0.5 * r.nbits for r in fills), fills
-
-
 def test_metrics_match_golden_wave_stats(
     spark, tiny_tables, tiny_dir, tmp_store_dir
 ):
@@ -173,7 +144,7 @@ def test_metrics_match_golden_wave_stats(
     )
     cfg = C.CrawlConfig(
         max_waves=3, default_budget=5,
-        bloom_shards=4, bloom_bits=1 << 14,
+        bloom_shards=4, cuckoo_buckets=1 << 10,
     )
     store = _run_engine(spark, tiny_dir, tmp_store_dir, cfg)
     m = (
@@ -281,7 +252,7 @@ def test_trace_invariant_across_parallelism(spark, tiny_dir, tmp_store_dir):
     import os
 
     cfg = C.CrawlConfig(
-        max_waves=3, bloom_shards=4, bloom_bits=1 << 14
+        max_waves=3, bloom_shards=4, cuckoo_buckets=1 << 10
     )
     orig = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -331,7 +302,7 @@ def test_synthetic_fetcher_matches_store_join(
     from torscrapper_spark.operators.fetch import SyntheticPagestore
 
     cfg = C.CrawlConfig(
-        max_waves=3, bloom_shards=4, bloom_bits=1 << 14
+        max_waves=3, bloom_shards=4, cuckoo_buckets=1 << 10
     )
     join_store = _run_engine(spark, tiny_dir, tmp_store_dir, cfg)
 
@@ -365,7 +336,7 @@ def test_synthetic_fetcher_matches_store_join(
     assert j_seen == s_seen
 
 
-@pytest.mark.parametrize("budget", [5, 2], ids=["b5_bloom", "b2_bloom"])
+@pytest.mark.parametrize("budget", [5, 2], ids=["b5", "b2"])
 def test_medium_tier_trace_and_seen_match_golden(
     spark, medium_tables, medium_dir, tmp_store_dir, budget
 ):
@@ -383,7 +354,7 @@ def test_medium_tier_trace_and_seen_match_golden(
     )
     cfg = C.CrawlConfig(
         max_waves=2, default_budget=budget,
-        bloom_shards=8, bloom_bits=1 << 16, salt_buckets=4,
+        bloom_shards=8, cuckoo_buckets=1 << 10, salt_buckets=4,
         salt_min_frontier_rows=0,  # force the salted phase at this scale
     )
     store = _run_engine(spark, medium_dir, tmp_store_dir, cfg)

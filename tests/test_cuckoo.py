@@ -1,6 +1,6 @@
-"""Cuckoo-filter seen variant (BASELINE.json:6 "cuckoo/bloom";
-VERDICT.md r4 next-round #6): golden-trace equality, no false
-negatives, deletion support, and saturation/degradation behavior."""
+"""Cuckoo seen filter (BASELINE.json:6 "cuckoo/bloom"; VERDICT.md r4
+next-round #6): golden-trace equality, no false negatives, deletion
+support, and saturation/degradation behavior."""
 
 import numpy as np
 import pandas as pd
@@ -30,74 +30,39 @@ def _trace(spark, store):
     ).reset_index(drop=True)
 
 
-def test_cuckoo_crawl_matches_golden_and_bloom(
+def test_cuckoo_crawl_matches_golden(
     spark, tiny_tables, tiny_dir, tmp_store_dir
 ):
-    """The cuckoo-backed crawl must produce the exact golden trace AND
-    the exact trace the bloom-backed crawl produces (the prefilter only
-    changes selectivity, never semantics)."""
+    """The cuckoo-backed crawl produces the exact golden trace (the
+    prefilter only changes selectivity, never semantics), and its
+    filter state table is named after the filter."""
     import os
-    import tempfile
 
     t = tiny_tables
     gold = refsim.simulate(
         t["pagestore"], t["seeds"], t["robots"], t["politeness"],
         max_waves=3, default_budget=5,
     )
-    ps = C.load_pagestore(spark, f"{tiny_dir}/pagestore.parquet")
-    seeds = spark.read.parquet(f"{tiny_dir}/seeds.parquet")
-    robots = spark.read.parquet(f"{tiny_dir}/robots.parquet")
-    pol = spark.read.parquet(f"{tiny_dir}/politeness.parquet")
-
-    cuckoo_store = SnapshotStore(tmp_store_dir)
+    store = SnapshotStore(tmp_store_dir)
     C.run_crawl(
-        spark, cuckoo_store, ps, seeds, robots, pol,
+        spark, store,
+        C.load_pagestore(spark, f"{tiny_dir}/pagestore.parquet"),
+        spark.read.parquet(f"{tiny_dir}/seeds.parquet"),
+        spark.read.parquet(f"{tiny_dir}/robots.parquet"),
+        spark.read.parquet(f"{tiny_dir}/politeness.parquet"),
         C.CrawlConfig(
             max_waves=3, default_budget=5,
-            seen_filter="cuckoo", bloom_shards=4, cuckoo_buckets=1 << 10,
+            bloom_shards=4, cuckoo_buckets=1 << 10,
         ),
     )
-    # auto-cleaned scratch: try/finally so an assertion failure above
-    # the cleanup can't leak the 3-wave snapshot store
-    import shutil
-
-    bloom_dir = tempfile.mkdtemp(prefix="tsnap_")
-    try:
-        bloom_store = SnapshotStore(bloom_dir)
-        C.run_crawl(
-            spark, bloom_store, ps, seeds, robots, pol,
-            C.CrawlConfig(
-                max_waves=3, default_budget=5,
-                seen_filter="bloom", bloom_shards=4, bloom_bits=1 << 14,
-            ),
-        )
-        eng = _trace(spark, cuckoo_store)
-        assert eng.equals(
-            gold.trace[TRACE_COLS].astype(
-                {"wave": "int64", "seq": "int64", "depth": "int64",
-                 "status": "int64"}
-            ).reset_index(drop=True)
-        )
-        assert eng.equals(_trace(spark, bloom_store))
-        # the filter state table is named after the filter
-        assert os.path.isdir(cuckoo_store.table_path("cuckoo", 0))
-        assert not os.path.isdir(os.path.join(cuckoo_store.root, "bloom"))
-        # seen sets identical
-        c_seen = {
-            r.url_hash
-            for r in cuckoo_store.read_upto(
-                spark, "seen", cuckoo_store.last_wave()
-            ).collect()
-        }
-        b_seen = {
-            r.url_hash
-            for r in bloom_store.read_upto(
-                spark, "seen", bloom_store.last_wave()
-            ).collect()
-        }
-        assert c_seen == b_seen
-    finally:
-        shutil.rmtree(bloom_dir, ignore_errors=True)
+    assert _trace(spark, store).equals(
+        gold.trace[TRACE_COLS].astype(
+            {"wave": "int64", "seq": "int64", "depth": "int64",
+             "status": "int64"}
+        ).reset_index(drop=True)
+    )
+    assert os.path.isdir(store.table_path("cuckoo", 0))
+    assert not os.path.isdir(os.path.join(store.root, "bloom"))
 
 
 def test_cuckoo_probe_no_false_negatives_and_low_fp(spark):
@@ -324,7 +289,7 @@ def test_cuckoo_saturation_guard_rebuilds(spark, tiny_tables, tiny_dir,
         spark.read.parquet(f"{tiny_dir}/politeness.parquet"),
         C.CrawlConfig(
             max_waves=3, default_budget=5,
-            seen_filter="cuckoo", bloom_shards=4, cuckoo_buckets=8,
+            bloom_shards=4, cuckoo_buckets=8,
         ),
     )
     assert _trace(spark, store).equals(

@@ -97,7 +97,7 @@ def test_crawl_trace_identical_on_bucketed_store(spark, tiny_dir):
         )
 
     base_cfg = dict(max_waves=2, bloom_shards=4,
-                    bloom_bits=1 << 14)
+                    cuckoo_buckets=1 << 10)
     flat = run(
         C.load_pagestore(spark, f"{tiny_dir}/pagestore.parquet"),
         C.CrawlConfig(**base_cfg),

@@ -6,7 +6,7 @@ columns until round 5's KMV upgrade dropped them). This pins the whole
 family to frozen constants instead: the algorithms are seed-fixed parts
 of Spark's public contract (xxhash64 and murmur3 with seed 42, crc32
 over raw bytes), the same primitives the crawl's url_hash (A5) and
-bloom/cuckoo key derivation build on — a silent behavior change here
+cuckoo key derivation build on — a silent behavior change here
 would corrupt every persisted seen-filter shard at resume time, so it
 must fail a test, not a crawl.
 """

@@ -7,7 +7,7 @@ is pinned here:
 
   1 materialize action (fetch+validate+probe, pid collect piggybacked)
   4 snapshot writes: seen (n_new rides an observe), frontier (count
-    rides an observe), bloom, ONE combined output (trace ⊇ pages ⊇
+    rides an observe), cuckoo, ONE combined output (trace ⊇ pages ⊇
     metrics — the old separate pages/metrics writes are gone)
   1 warm-cache count inside the output job (partition-count scan)
 
@@ -66,7 +66,7 @@ def test_steady_wave_write_and_job_floor(spark, tiny_dir):
             spark.read.parquet(f"{tiny_dir}/politeness.parquet"),
             C.CrawlConfig(
                 max_waves=3, bloom_shards=4,
-                bloom_bits=1 << 14,
+                cuckoo_buckets=1 << 10,
             ),
         )
         n_jobs = len(jobs() - before)
@@ -79,14 +79,14 @@ def test_steady_wave_write_and_job_floor(spark, tiny_dir):
     per_wave: dict[int, list[str]] = {}
     for table, w in store.writes:
         per_wave.setdefault(w, []).append(table)
-    assert sorted(per_wave[0]) == ["bloom", "frontier", "seen", "trace"], (
+    assert sorted(per_wave[0]) == ["cuckoo", "frontier", "seen", "trace"], (
         per_wave
     )  # wave 0: init state (3) + wave 0's combined output (1)
     for w in range(1, waves):
         assert sorted(per_wave[w]) == [
-            "bloom", "frontier", "seen", "trace"
+            "cuckoo", "frontier", "seen", "trace"
         ], (w, per_wave)
-    assert sorted(per_wave[waves]) == ["bloom", "frontier", "seen"], (
+    assert sorted(per_wave[waves]) == ["cuckoo", "frontier", "seen"], (
         per_wave
     )  # final state snapshot; wave N's output table would be wave N's
     for tbl in ("pages", "metrics"):
@@ -97,3 +97,52 @@ def test_steady_wave_write_and_job_floor(spark, tiny_dir):
         f"measured ceiling {JOB_CEILING} — a per-wave fixed job crept "
         "back in (see module docstring)"
     )
+
+
+def _crawl(spark, tiny_dir):
+    C.run_crawl(
+        spark,
+        SnapshotStore(tempfile.mkdtemp()),
+        C.load_pagestore(spark, f"{tiny_dir}/pagestore.parquet"),
+        spark.read.parquet(f"{tiny_dir}/seeds.parquet"),
+        spark.read.parquet(f"{tiny_dir}/robots.parquet"),
+        spark.read.parquet(f"{tiny_dir}/politeness.parquet"),
+        C.CrawlConfig(max_waves=3, bloom_shards=4, cuckoo_buckets=1 << 10),
+    )
+
+
+def test_repeat_crawl_compiles_almost_nothing(spark, tiny_dir):
+    """A crawl's generated classes fit Spark's codegen cache
+    (``session.get_spark`` sizes it), so the same crawl run again in
+    the same session compiles next to nothing. With Spark's default
+    100-entry cache, eviction made every wave recompile ~100 classes."""
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    _crawl(spark, tiny_dir)
+    before = compiles.getCount()
+    _crawl(spark, tiny_dir)
+    assert compiles.getCount() - before <= 5
+
+
+def test_repeat_crawls_start_no_driver_threads(spark, tiny_dir, monkeypatch):
+    """The crawl's driver threads are long-lived: after a first crawl has
+    started them, later crawls start no Python thread (each new thread
+    that calls into the JVM opens its own py4j connection and JVM
+    thread). A pool per wave and per crawl started 2 threads a wave and
+    one a crawl."""
+    import threading
+
+    _crawl(spark, tiny_dir)
+    started = []
+    start = threading.Thread.start
+
+    def counting_start(self):
+        started.append(self.name)
+        start(self)
+
+    monkeypatch.setattr(threading.Thread, "start", counting_start)
+    _crawl(spark, tiny_dir)
+    _crawl(spark, tiny_dir)
+    assert started == []

@@ -72,56 +72,15 @@ def test_with_global_seq_matches_sorted_enumerate(spark):
     getattr(out, "_seq_cache").unpersist()
 
 
-def test_bloom_no_false_negatives_and_exactness(spark):
-    rng = np.random.default_rng(11)
-    seen_hashes = rng.integers(-(1 << 62), 1 << 62, 2000, dtype=np.int64)
-    cand_hashes = np.concatenate([seen_hashes[:500], rng.integers(-(1 << 62), 1 << 62, 1500, dtype=np.int64)])
-    seen_df = spark.createDataFrame(pd.DataFrame({"url_hash": seen_hashes}), "url_hash long")
-    cand_df = spark.createDataFrame(
-        pd.DataFrame({"url_hash": cand_hashes, "url": [f"u{i}" for i in range(len(cand_hashes))]}),
-        "url_hash long, url string",
-    )
-    shards, nbits, k = 4, 1 << 15, 5
-    bloom = seen_op.update_bloom(
-        seen_op.empty_bloom(spark, shards, nbits, k), seen_df, shards
-    )
-    probed = seen_op.probe_bloom(cand_df, bloom, shards).toPandas()
-    seen_set = set(int(h) for h in seen_hashes)
-    truly_seen = probed["url_hash"].astype("int64").map(lambda h: h in seen_set)
-    # no false negatives: everything seen must be flagged maybe_seen
-    assert probed.loc[truly_seen.values, "maybe_seen"].all()
-    # fast path == exact path
-    fast, probe_cache = seen_op.new_candidates(
-        cand_df, seen_df, bloom, shards, use_bloom=True
-    )
-    exact = seen_op.exact_new(cand_df, seen_df)
-    assert sorted(r.url for r in fast.collect()) == sorted(r.url for r in exact.collect())
-    if probe_cache is not None:
-        probe_cache.unpersist()
-
-
-def test_bloom_incremental_update_covers_both_deltas(spark):
-    a = spark.createDataFrame(pd.DataFrame({"url_hash": np.arange(0, 100, dtype=np.int64)}), "url_hash long")
-    b = spark.createDataFrame(pd.DataFrame({"url_hash": np.arange(100, 200, dtype=np.int64)}), "url_hash long")
-    shards, nbits, k = 2, 1 << 12, 4
-    bloom = seen_op.update_bloom(seen_op.empty_bloom(spark, shards, nbits, k), a, shards)
-    bloom = seen_op.update_bloom(bloom, b, shards)
-    cand = spark.createDataFrame(
-        pd.DataFrame({"url_hash": np.arange(0, 200, dtype=np.int64), "url": [f"u{i}" for i in range(200)]}),
-        "url_hash long, url string",
-    )
-    probed = seen_op.probe_bloom(cand, bloom, shards).toPandas()
-    assert probed["maybe_seen"].all()
-
-
 def test_seen_scan_partition_prunes_to_positive_pids(spark, tmp_path):
     """VERDICT.md r2 next-round #3: with the seen table bucket-
     partitioned by pid, the residual dup-check must SCAN only the
-    buckets the wave's bloom-positives touch. Catalyst DPP declines
+    buckets the wave's filter-positives touch. Catalyst DPP declines
     this join (bare-boolean build-side filter fails isLikelySelective),
     so new_candidates plants a static ``pid IN (…)`` — assert it shows
     up as a PartitionFilter on the seen FileScan, and that the result
     still equals the exact anti-join."""
+    from torscrapper_spark.operators import cuckoo
     from torscrapper_spark.sources.tableio import SnapshotStore
 
     shards = 8
@@ -143,16 +102,17 @@ def test_seen_scan_partition_prunes_to_positive_pids(spark, tmp_path):
         }),
         "url_hash long, url string",
     )
-    bloom = seen_op.update_bloom(
-        seen_op.empty_bloom(spark, shards, 1 << 14, 5), seen_df, shards
+    flt = cuckoo.update_cuckoo(
+        cuckoo.empty_cuckoo(spark, shards, 1 << 10), seen_df, shards
     )
     new, probe_cache = seen_op.new_candidates(
-        cand, seen_rd, bloom, shards, use_bloom=True
+        cand, seen_rd, flt, shards, use_bloom=True,
+        probe_fn=cuckoo.probe_cuckoo,
     )
     plan = new._jdf.queryExecution().executedPlan().toString()
     # NB: plan toString truncates the Location path, so match on the
     # FileScan + PartitionFilters shape (the only FileScan in this plan
-    # is the seen snapshot — candidates/bloom are in-memory frames)
+    # is the seen snapshot — candidates/filter are in-memory frames)
     scan_lines = [
         ln for ln in plan.splitlines()
         if "FileScan" in ln and "PartitionFilters:" in ln
@@ -167,68 +127,6 @@ def test_seen_scan_partition_prunes_to_positive_pids(spark, tmp_path):
     )
     if probe_cache is not None:
         probe_cache.unpersist()
-
-
-def test_bloom_saturation_guard_bounds_fp_rate(spark):
-    """VERDICT.md r3 next-round #3: grow the seen set to 10× the
-    configured shard capacity; the saturation guard must rebuild
-    saturated shards at grown nbits so the measured false-positive rate
-    stays < 2% (and the no-false-negative invariant keeps holding).
-    Without the guard, 10× over-capacity at k=5 saturates the bitmap
-    (fill → ~1.0) and nearly every fresh candidate turns bloom-positive."""
-    shards, nbits0, k = 2, 1 << 10, 5
-    # configured capacity ≈ load 0.3 → nbits*0.3/k ≈ 102 keys/shard;
-    # insert ~10× that (2048 keys over 2 shards) in 8 delta waves
-    rng = np.random.default_rng(23)
-    all_keys = np.unique(
-        rng.integers(0, 1 << 40, 4096, dtype=np.int64)
-    )[:2048]
-    bloom = seen_op.empty_bloom(spark, shards, nbits0, k)
-    seen_so_far = None
-    for w in range(8):
-        delta_keys = all_keys[w * 256:(w + 1) * 256]
-        delta = spark.createDataFrame(
-            pd.DataFrame({"url_hash": delta_keys}), "url_hash long"
-        )
-        seen_prev = seen_so_far if seen_so_far is not None else (
-            spark.createDataFrame(
-                pd.DataFrame({"url_hash": np.array([], dtype=np.int64)}),
-                "url_hash long",
-            )
-        )
-        bloom = seen_op.update_bloom(bloom, delta, shards)
-        bloom = seen_op.grow_saturated_shards(
-            spark, bloom, seen_prev, delta, shards
-        )
-        seen_so_far = seen_prev.unionByName(delta)
-    fills = seen_op.bloom_fill(bloom).collect()
-    # the guard actually fired: shards grew past the configured nbits
-    assert all(r.nbits > nbits0 for r in fills), fills
-    assert all(r.set_bits <= 0.4 * r.nbits for r in fills), fills
-    # no false negatives on every inserted key
-    ins = spark.createDataFrame(
-        pd.DataFrame({
-            "url_hash": all_keys,
-            "url": [f"i{i}" for i in range(len(all_keys))],
-        }),
-        "url_hash long, url string",
-    )
-    probed_in = seen_op.probe_bloom(ins, bloom, shards).toPandas()
-    assert probed_in["maybe_seen"].all()
-    # measured FP rate on 4000 disjoint fresh keys < 2%
-    fresh_keys = np.unique(
-        rng.integers(0, 1 << 40, 8192, dtype=np.int64)
-    )[:4096] + (1 << 41)
-    fresh = spark.createDataFrame(
-        pd.DataFrame({
-            "url_hash": fresh_keys,
-            "url": [f"f{i}" for i in range(len(fresh_keys))],
-        }),
-        "url_hash long, url string",
-    )
-    probed = seen_op.probe_bloom(fresh, bloom, shards).toPandas()
-    fp_rate = float(probed["maybe_seen"].mean())
-    assert fp_rate < 0.02, fp_rate
 
 
 def test_robots_gate_newline_path_matches_refsim(spark):
@@ -300,58 +198,16 @@ def test_run_crawl_rejects_duplicate_dimension_domains(spark, tiny_dir):
         )
 
 
-def test_grow_bloom_keeps_empty_saturated_shard(spark):
-    """Bloom twin of the cuckoo empty-rebuild guard: a saturated shard
-    whose full key set is empty must come back as a fresh empty bitmap,
-    not vanish (probe would answer maybe_seen=True for that pid
-    forever)."""
-    nbits = 64
-    full = np.full(nbits // 8, 0xFF, np.uint8).tobytes()
-    empty_bm = np.zeros(nbits // 8, np.uint8).tobytes()
-    bloom = spark.createDataFrame(
-        pd.DataFrame({
-            "pid": pd.Series([0, 1], dtype="int32"),
-            "bitmap": [empty_bm, full],
-            "nbits": pd.Series([nbits, nbits], dtype="int32"),
-            "k": pd.Series([3, 3], dtype="int32"),
-        }),
-        seen_op.BLOOM_SCHEMA,
-    )
-    empty = spark.createDataFrame(
-        pd.DataFrame({"url_hash": pd.Series([], dtype="int64")}),
-        "url_hash long",
-    )
-    grown = seen_op.grow_saturated_shards(spark, bloom, empty, empty, 2)
-    out = grown.toPandas()
-    bloom.unpersist()
-    grown._keys_cache.unpersist()  # the guard's shared key-scan cache
-    assert sorted(out["pid"]) == [0, 1]
-    row = out[out["pid"] == 1].iloc[0]
-    assert bytes(row.bitmap) == empty_bm  # rebuilt fresh-empty
-    assert int(row.nbits) == nbits and int(row.k) == 3
-
-
 def test_empty_filters_are_built_on_the_executors(spark):
-    """The wave-0 bloom and cuckoo tables are generated over
-    ``spark.range`` on the executors: a driver-side frame is a
-    LocalTableScan that serializes every zeroed shard into its tasks
-    (~1 MB per task at 16 shards × 2^21 bits). The rows stay one zeroed
-    shard per pid with the configured sizes."""
+    """The wave-0 cuckoo tables are generated over ``spark.range`` on
+    the executors: a driver-side frame is a LocalTableScan that
+    serializes every zeroed shard into its tasks (~1 MB per task for a
+    4 MB filter over 4 tasks). The rows stay one zeroed shard per pid
+    with the configured sizes."""
     from torscrapper_spark.operators import cuckoo
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
-
-    bloom = seen_op.empty_bloom(spark, 16, 1 << 21, 5)
-    assert "LocalTableScan" not in plan(bloom)
-    assert bloom.schema.simpleString() == (
-        "struct<pid:int,bitmap:binary,nbits:int,k:int>"
-    )
-    rows = bloom.collect()
-    assert sorted(r.pid for r in rows) == list(range(16))
-    for r in rows:
-        assert bytes(r.bitmap) == bytes(1 << 18)
-        assert (r.nbits, r.k) == (1 << 21, 5)
 
     cf = cuckoo.empty_cuckoo(spark, 8, 1 << 12)
     assert "LocalTableScan" not in plan(cf)

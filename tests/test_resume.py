@@ -31,7 +31,7 @@ def _trace(spark, store):
 
 def test_resume_equals_uninterrupted(spark, tiny_dir):
     ps, seeds, robots, pol = _inputs(spark, tiny_dir)
-    full_cfg = C.CrawlConfig(max_waves=3, bloom_shards=4, bloom_bits=1 << 14)
+    full_cfg = C.CrawlConfig(max_waves=3, bloom_shards=4, cuckoo_buckets=1 << 10)
 
     s_full = SnapshotStore(tempfile.mkdtemp())
     C.run_crawl(spark, s_full, ps, seeds, robots, pol, full_cfg)
@@ -39,7 +39,7 @@ def test_resume_equals_uninterrupted(spark, tiny_dir):
     s_part = SnapshotStore(tempfile.mkdtemp())
     # "crash" after wave 1's commit…
     C.run_crawl(spark, s_part, ps, seeds, robots, pol,
-                C.CrawlConfig(max_waves=1, bloom_shards=4, bloom_bits=1 << 14))
+                C.CrawlConfig(max_waves=1, bloom_shards=4, cuckoo_buckets=1 << 10))
     assert s_part.last_wave() == 1
     # …and resume to completion
     C.run_crawl(spark, s_part, ps, seeds, robots, pol, full_cfg)
@@ -84,14 +84,14 @@ class _CrashingStore(SnapshotStore):
 )
 def test_resume_from_uncommitted_window(spark, tiny_dir, crash_point,
                                         crash_wave):
-    """Crash AFTER wave 1's seen/frontier/bloom snapshots land but
+    """Crash AFTER wave 1's seen/frontier/cuckoo snapshots land but
     BEFORE manifest_2 exists (the hole the commit-point design claims
     to close): last_wave() must still read 1, resume must overwrite the
     orphaned wave=2 state dirs, and the finished crawl must be
     bit-identical to an uninterrupted one."""
     ps, seeds, robots, pol = _inputs(spark, tiny_dir)
     cfg = C.CrawlConfig(
-        max_waves=3, bloom_shards=4, bloom_bits=1 << 14
+        max_waves=3, bloom_shards=4, cuckoo_buckets=1 << 10
     )
 
     s_full = SnapshotStore(tempfile.mkdtemp())

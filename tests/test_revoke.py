@@ -46,8 +46,7 @@ def _trace(spark, store):
 def _cfg(**kw):
     base = dict(
         max_waves=3, default_budget=5,
-        seen_filter="cuckoo", bloom_shards=4, cuckoo_buckets=1 << 10,
-        bloom_bits=1 << 14,
+        bloom_shards=4, cuckoo_buckets=1 << 10,
     )
     base.update(kw)
     return C.CrawlConfig(**base)
@@ -268,10 +267,9 @@ def test_revoke_forget_removes_from_seen_and_cuckoo(spark, tiny_dir):
     assert multi <= rev_urls
 
 
-@pytest.mark.parametrize("filt", ["cuckoo", "bloom"])
-def test_revoke_reseed_refetches_exactly_the_revoked(spark, tiny_dir, filt):
+def test_revoke_reseed_refetches_exactly_the_revoked(spark, tiny_dir):
     ps, seeds, robots, pol = _inputs(spark, tiny_dir)
-    cfg = _cfg(max_waves=2, seen_filter=filt)
+    cfg = _cfg(max_waves=2)
     store = SnapshotStore(tempfile.mkdtemp())
     C.run_crawl(spark, store, ps, seeds, robots, pol, cfg)
     w = store.last_wave()
@@ -290,7 +288,7 @@ def test_revoke_reseed_refetches_exactly_the_revoked(spark, tiny_dir, filt):
     assert store.base_wave("seen") is None
 
     C.run_crawl(spark, store, ps, seeds, robots, pol,
-                _cfg(max_waves=w + 4, seen_filter=filt))
+                _cfg(max_waves=w + 4))
     tr = _trace(spark, store)
     counts = tr.groupby("url").size()
     rev_urls = set(fetched["url"])
@@ -300,18 +298,15 @@ def test_revoke_reseed_refetches_exactly_the_revoked(spark, tiny_dir, filt):
     assert (others == 1).all()
 
 
-@pytest.mark.parametrize("filt", ["cuckoo", "bloom"])
-def test_revoke_forget_unqueues_a_frontier_url(spark, tiny_dir, filt):
+def test_revoke_forget_unqueues_a_frontier_url(spark, tiny_dir):
     """Forget-mode revocation of a URL that is still QUEUED (in the
     frontier, not yet fetched) must remove it from the frontier in the
     same step it leaves seen — left behind it would fetch the
     just-revoked content next wave, and (absent from seen) links could
     re-queue it while queued, the exact double-queue the
-    ``frontier ⊆ seen`` invariant exists to prevent. Parametrized over
-    both filters so the bloom path's rebuild-from-compacted-seen (via
-    zeroed_like) gets end-to-end coverage too."""
+    ``frontier ⊆ seen`` invariant exists to prevent."""
     ps, seeds, robots, pol = _inputs(spark, tiny_dir)
-    cfg = _cfg(max_waves=2, seen_filter=filt)
+    cfg = _cfg(max_waves=2)
     store = SnapshotStore(tempfile.mkdtemp())
     C.run_crawl(spark, store, ps, seeds, robots, pol, cfg)
     w = store.last_wave()
@@ -344,7 +339,7 @@ def test_revoke_forget_unqueues_a_frontier_url(spark, tiny_dir, filt):
     # the resumed crawl never fetches any URL twice: the revoked ones
     # were never fetched, so even link-rediscovery queues them once
     C.run_crawl(spark, store, ps, seeds, robots, pol,
-                _cfg(max_waves=w + 3, seen_filter=filt))
+                _cfg(max_waves=w + 3))
     tr = _trace(spark, store)
     assert (tr.groupby("url").size() == 1).all()
 
@@ -527,27 +522,3 @@ def test_revoke_reseed_on_crashed_forget_raises(spark, tiny_dir):
 
     out = C.revoke_urls(spark, store, rev_df, cfg)  # documented repair
     assert out["repaired"] == 2 and store.last_wave() == w + 1
-
-
-def test_zeroed_like_preserves_grown_nbits(spark):
-    """The forget-mode bloom rebuild seeds from zeroed copies of the
-    live shards: per-shard nbits that the saturation guard grew must
-    survive (resetting to the configured size would re-pack the full
-    seen set into undersized bitmaps)."""
-    from torscrapper_spark.operators import seen as S
-
-    rows = pd.DataFrame({
-        "pid": pd.Series([0, 1, 2], dtype="int32"),
-        # shard 1 was grown to 2× nbits; give every bitmap set bits
-        "bitmap": [bytes([0xFF] * 128), bytes([0xFF] * 256),
-                   bytes([0xFF] * 128)],
-        "nbits": pd.Series([1024, 2048, 1024], dtype="int32"),
-        "k": pd.Series([3, 3, 3], dtype="int32"),
-    })
-    bloom = spark.createDataFrame(rows, S.BLOOM_SCHEMA)
-    z = {r.pid: r for r in S.zeroed_like(bloom).collect()}
-    assert [z[p].nbits for p in (0, 1, 2)] == [1024, 2048, 1024]
-    assert all(z[p].k == 3 for p in (0, 1, 2))
-    for p in (0, 1, 2):
-        b = bytes(z[p].bitmap)
-        assert len(b) == z[p].nbits // 8 and not any(b)

@@ -92,7 +92,7 @@ def test_resume_after_store_layout_upgrade(spark, tiny_dir, tmp_store_dir):
     robots = spark.read.parquet(f"{tiny_dir}/robots.parquet")
     pol = spark.read.parquet(f"{tiny_dir}/politeness.parquet")
     full_cfg = C.CrawlConfig(
-        max_waves=3, bloom_shards=4, bloom_bits=1 << 14
+        max_waves=3, bloom_shards=4, cuckoo_buckets=1 << 10
     )
     s_full = SnapshotStore(tempfile.mkdtemp(prefix="tsio_full_"))
     C.run_crawl(spark, s_full, ps, seeds, robots, pol, full_cfg)
@@ -101,7 +101,7 @@ def test_resume_after_store_layout_upgrade(spark, tiny_dir, tmp_store_dir):
     C.run_crawl(
         spark, s_up, ps, seeds, robots, pol,
         C.CrawlConfig(max_waves=1, bloom_shards=4,
-                      bloom_bits=1 << 14),
+                      cuckoo_buckets=1 << 10),
     )
     # downgrade every committed seen version to the flat pre-upgrade
     # layout (data read back and rewritten without any pid)

@@ -278,7 +278,7 @@ TINY = GraphConfig(n_domains=20, pages_per_domain=10, links_per_page=4, n_seeds=
 SMALL = GraphConfig(n_domains=60, pages_per_domain=25, links_per_page=5, n_seeds=12)
 MEDIUM = GraphConfig(n_domains=150, pages_per_domain=40, links_per_page=6, n_seeds=20)
 # third golden axis (SURVEY.md §5.2 item 3; VERDICT.md r3 next-round #8):
-# wide enough that every bloom shard/politeness bucket carries real load;
+# wide enough that every filter shard/politeness bucket carries real load;
 # small 8px images + compressed fmts keep generation/runtime in budget
 LARGE = GraphConfig(
     n_domains=600, pages_per_domain=60, links_per_page=6, n_seeds=60,

@@ -1,15 +1,15 @@
-"""Partitioned cuckoo-filter URL-seen variant (SURVEY.md A8 alternative;
-BASELINE.json:6 names "partitioned cuckoo/bloom URL-seen filter" — the
-bloom satisfies the disjunction, this module completes it and adds the
-one capability a bloom cannot offer: DELETION, so a revoked seed list
-can be unlearned without rebuilding the filter from the full key set).
+"""Partitioned cuckoo filter: the crawl's URL-seen prefilter (SURVEY.md
+A8; BASELINE.json:6 "partitioned cuckoo/bloom URL-seen filter"). A
+cuckoo filter, unlike a bloom, supports DELETION, so a revoked seed list
+is unlearned by removing just its keys instead of rebuilding the filter
+from the full key set.
 
-Same architecture as the bloom (operators/seen.py): one row per
-``pid = pmod(url_hash, P)`` shard, state mutated/probed in Arrow-batched
-cogroup ``applyInPandas`` keyed on pid — no driver collect, no broadcast
-of state, co-partitioned with the seen deltas across waves. Semantics
-are anchored by the same EXACT residual anti-join: the filter is a pure
-prefilter, so correctness never depends on it.
+One row per ``pid = pmod(url_hash, P)`` shard, state mutated/probed in
+Arrow-batched cogroup ``applyInPandas`` keyed on pid — no driver
+collect, no broadcast of state, co-partitioned with the seen deltas
+across waves. Semantics are anchored by the EXACT residual anti-join
+(operators/seen.py): the filter is a pure prefilter, so correctness
+never depends on it.
 
 Shard layout (partial-key cuckoo hashing, Fan et al., CoNEXT'14 —
 public algorithm): ``nbuckets`` buckets × 4 slots of uint16
@@ -35,7 +35,7 @@ once (the crawl's delta is exactly-new by construction — the exact
 anti-join guarantees no re-insert), and never delete a key that was
 not inserted.
 
-Scale notes mirror the bloom's: 10^10 keys over ~200 shards is ~5·10^7
+Scale notes: 10^10 keys over ~200 shards is ~5·10^7
 keys/shard → ``nbuckets = 2^24`` → 128 MB/shard at 4×16-bit slots, FP
 rate ≈ 2·4·2^-16 ≈ 0.012%; in the sandbox the defaults are tiny.
 Insert/lookup/delete are vectorized over the batch (sorted-by-bucket
@@ -245,8 +245,7 @@ def update_cuckoo(filt: DataFrame, delta: DataFrame, num_shards: int
 
 def delete_cuckoo(filt: DataFrame, keys: DataFrame, num_shards: int
                   ) -> DataFrame:
-    """Remove the keys' fingerprints (seed revocation — the capability
-    a bloom cannot offer). Caller contract: every key was previously
+    """Remove the keys' fingerprints (seed revocation). Caller contract: every key was previously
     inserted (standard cuckoo-filter delete semantics)."""
     d = with_pid(keys.select("url_hash"), num_shards)
 
@@ -293,7 +292,7 @@ def probe_cuckoo(
 ) -> DataFrame:
     """Adds ``maybe_seen boolean``; False ⇒ definitely not in the seen
     set (a degraded shard answers True for everything — exact fallback,
-    never a false negative). Same contract as seen.probe_bloom."""
+    never a false negative)."""
     cols = candidates.columns
     c = with_pid(candidates, num_shards)
     out_schema = ", ".join(
@@ -385,12 +384,11 @@ def grow_saturated_cuckoo(
     num_shards: int,
     max_load: float = 0.8,
 ) -> DataFrame:
-    """Saturation guard, mirror of seen.grow_saturated_shards: shards
-    past ``max_load`` occupancy (cuckoo insert failure probability
-    climbs steeply above ~0.84 at 4 slots/bucket) — or already degraded
-    — are REBUILT from the full key set of their bucket (partition-
-    pruned seen scan unioned with this wave's delta) at nbuckets doubled
-    until the expected load ≤ 0.5. The common case costs one occupancy
+    """Saturation guard: shards past ``max_load`` occupancy (cuckoo
+    insert failure probability climbs steeply above ~0.84 at 4
+    slots/bucket) — or already degraded — are REBUILT from the full key
+    set of their bucket (partition-pruned seen scan unioned with this
+    wave's delta) at nbuckets doubled until the expected load ≤ 0.5. The common case costs one occupancy
     job. Returns the (possibly partially rebuilt) filter; the input's
     persist is left for the caller to release after materializing, and
     when a rebuild ran the result carries the key scan's cache as

@@ -18,17 +18,17 @@ Wave w dataflow (all lazy until the snapshot writes):
        │              (one combined output:      │     extract_candidates
        │               seq + page verdicts +     │           │
        │               partition_id lineage)     │           │
-       │                          new = candidates ∖ seen (bloom-accelerated)
+       │                         new = candidates ∖ seen (cuckoo-accelerated)
        │                                         │
   frontier_{w+1} = (frontier_w ∖ selected) ∪ robots_gate(new)   [salted]
-  seen_{w+1}    += new            bloom_{w+1} = bloom_w | bits(new)
+  seen_{w+1}    += new            cuckoo_{w+1} = cuckoo_w + fingerprints(new)
 
 Per-wave Spark actions are a deliberately minimal FIVE on the steady
 path (VERDICT.md r4 next-round #1 — the fixed per-wave job floor is
 the scale-killer class at high parallelism): one materialize job
 (fetch+validate+probe, with the fetch count riding an observe() and
-the bloom-positive pid collect riding the same action), the seen /
-frontier / bloom state writes, and one combined output write
+the filter-positive pid collect riding the same action), the seen /
+frontier / cuckoo state writes, and one combined output write
 (trace ⊇ pages ⊇ metrics; see :func:`read_pages` /
 :func:`read_metrics`).
 """
@@ -36,6 +36,7 @@ frontier / bloom state writes, and one combined output write
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,18 +56,9 @@ from ..operators.cuckoo import (
     delete_cuckoo,
     empty_cuckoo,
     grow_saturated_cuckoo,
-    probe_cuckoo,
     update_cuckoo,
 )
-from ..operators.seen import (
-    empty_bloom,
-    grow_saturated_shards,
-    new_candidates,
-    probe_bloom,
-    update_bloom,
-    with_pid,
-    zeroed_like,
-)
+from ..operators.seen import new_candidates, with_pid
 from ..operators.seq import with_global_seq
 from ..sources.tableio import SnapshotStore
 
@@ -88,16 +80,22 @@ TRACE_SINGLE_TASK_ROWS = 50_000
 SELECT_ROWS_PER_TASK = 400_000
 
 
+# Driver threads live as long as the process: every new Python thread
+# that calls into py4j opens its own connection and JVM thread, and a
+# pool per wave and per crawl started three of them per wave.
+# _STATE_POOL runs the state chain's concurrent writes; _OUTPUT_POOL's
+# single worker runs each wave's output write + commit in submission
+# (wave) order.
+_STATE_POOL = ThreadPoolExecutor(max_workers=2, thread_name_prefix="crawl-state")
+_OUTPUT_POOL = ThreadPoolExecutor(max_workers=1, thread_name_prefix="crawl-output")
+
+
 def _run_concurrently(jobs) -> None:
     """Submit independent Spark jobs from driver threads (supported by
     the Spark scheduler) so their fixed costs overlap. Exceptions from
     any job propagate."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        futures = [ex.submit(j) for j in jobs]
-        for f in futures:
-            f.result()
+    for f in [_STATE_POOL.submit(j) for j in jobs]:
+        f.result()
 
 PAGESTORE_COLS = [
     "url", "url_hash", "image_id", "bytes", "w", "h", "fmt",
@@ -143,16 +141,13 @@ def read_metrics(spark: SparkSession, store: "SnapshotStore") -> DataFrame:
 class CrawlConfig:
     max_waves: int = 8
     default_budget: int = DEFAULT_BUDGET
+    # shard count of the seen filter and of the seen table's pid
+    # layout (the name predates the cuckoo filter)
     bloom_shards: int = 8
-    bloom_bits: int = 1 << 16     # per shard; size for ~14 bits/key at scale
-    bloom_k: int = 5
-    # which probabilistic prefilter backs the seen check: "bloom"
-    # (operators/seen.py) or "cuckoo" (operators/cuckoo.py — adds
-    # deletion for seed revocation; BASELINE.json:6 "partitioned
-    # cuckoo/bloom"). Same pid sharding, same exact residual, same
-    # snapshot lifecycle; the state table is named after the filter.
-    seen_filter: str = "bloom"
-    cuckoo_buckets: int = 1 << 12  # per shard; 4 slots each
+    # per shard, 4 slots each; size so the crawl's seen total stays
+    # under 0.6 load (shards × buckets × 4 × 0.6), where no wave pays
+    # the saturation guard's occupancy job or rebuild
+    cuckoo_buckets: int = 1 << 12
     salt_buckets: int = 0         # >1 enables two-phase budget top-k
     pagestore_buckets: int = 0    # >0: pagestore is bucket-partitioned (DPP)
     # Salted phase-1 budget top-k only engages above this frontier row
@@ -199,6 +194,10 @@ class CrawlConfig:
     # time travel).
     retain_state_snapshots: int | None = None
 
+    # state table of the seen prefilter (operators/cuckoo.py). A class
+    # constant, not a field: there is one filter.
+    seen_filter = "cuckoo"
+
 
 def _file_width(rows: int, cfg: "CrawlConfig") -> int:
     """Snapshot-write width from row count (see state_rows_per_file)."""
@@ -208,13 +207,9 @@ def _file_width(rows: int, cfg: "CrawlConfig") -> int:
 
 def _filter_width(cfg: "CrawlConfig") -> int:
     """Filter-snapshot write width: ~64 MB files by the configured shard
-    BYTES (bloom: nbits/8 per shard; cuckoo: 4 two-byte slots per
-    bucket), not by the merge or delete's shuffle width."""
-    if cfg.seen_filter == "cuckoo":
-        shard_bytes = cfg.bloom_shards * cfg.cuckoo_buckets * 8
-    else:
-        shard_bytes = cfg.bloom_shards * (cfg.bloom_bits // 8)
-    return max(1, shard_bytes // (64 << 20))
+    bytes (4 two-byte slots per bucket), not by the merge or delete's
+    shuffle width."""
+    return max(1, cfg.bloom_shards * cfg.cuckoo_buckets * 8 // (64 << 20))
 
 
 def load_pagestore(
@@ -284,12 +279,12 @@ def init_state(
     robots: DataFrame,
     cfg: CrawlConfig,
 ) -> None:
-    """Write the wave-0 snapshot (frontier/seen/bloom) and commit it."""
+    """Write the wave-0 snapshot (frontier/seen/cuckoo) and commit it."""
     canon = canonical_seeds(seeds).persist()
     n_canon = canon.count()
     width = _file_width(n_canon, cfg)
     # seen deltas are physically bucketed by pid = pmod(url_hash, shards)
-    # — the same sharding the bloom uses — so every later wave's residual
+    # — the same sharding the filter uses — so every later wave's residual
     # dup-check scan partition-prunes to the touched buckets (seen.py)
     seen0 = with_pid(
         canon.select("url_hash", F.lit(0).cast("int").alias("wave_added")),
@@ -298,18 +293,11 @@ def init_state(
     frontier0 = robots_gate(canon, robots).select(*FRONTIER_COLS)
     store.write(frontier0.repartition(width), "frontier", 0)
     store.write(seen0, "seen", 0, partition_by="pid")
-    if cfg.seen_filter == "cuckoo":
-        flt0 = update_cuckoo(
-            empty_cuckoo(spark, cfg.bloom_shards, cfg.cuckoo_buckets),
-            store.read(spark, "seen", 0),
-            cfg.bloom_shards,
-        )
-    else:
-        flt0 = update_bloom(
-            empty_bloom(spark, cfg.bloom_shards, cfg.bloom_bits, cfg.bloom_k),
-            store.read(spark, "seen", 0),
-            cfg.bloom_shards,
-        )
+    flt0 = update_cuckoo(
+        empty_cuckoo(spark, cfg.bloom_shards, cfg.cuckoo_buckets),
+        store.read(spark, "seen", 0),
+        cfg.bloom_shards,
+    )
     store.write(flt0, cfg.seen_filter, 0)
     n_frontier = store.read(spark, "frontier", 0).count()
     n_seen = store.read(spark, "seen", 0).count()
@@ -331,7 +319,7 @@ def run_wave(
     """Execute wave ``wave`` (state w → state w+1 + outputs).
 
     Returns ``(info, finish_outputs)``: ``info`` has the wave's counts
-    and is available as soon as the STATE chain (seen/frontier/bloom
+    and is available as soon as the STATE chain (seen/frontier/cuckoo
     writes) lands — everything wave w+1 depends on — while
     ``finish_outputs()`` runs the output writes (trace/pages/metrics)
     and releases the wave's caches. The caller overlaps
@@ -350,9 +338,6 @@ def run_wave(
 
     frontier = store.read(spark, "frontier", wave)
     seen = store.read_upto(spark, "seen", wave)
-    # `flt` is whichever probabilistic prefilter the config selected
-    # (bloom bitmaps or cuckoo fingerprint tables — same pid sharding,
-    # same snapshot lifecycle, state table named after the filter)
     flt = store.read(spark, cfg.seen_filter, wave)
 
     # salted phase-1 gate + data-proportional window width (see
@@ -414,7 +399,7 @@ def run_wave(
     # ONE materialize action on the wave's critical path (VERDICT.md r4
     # next-round #1 — the old layout paid a dedicated count job PLUS a
     # dedicated pid-collect job per wave, pure scheduler floor that
-    # never shrank with cores): on the bloom path the pid collect IS
+    # never shrank with cores): the filter-positive pid collect IS
     # the materialize job — fetch + validate + extract + probe run
     # end-to-end exactly once, filling both caches, and the collect is
     # bounded by the shard count (~200 small ints at 10^10 scale). The
@@ -432,13 +417,9 @@ def run_wave(
     )
     # the shared production path (operators/seen.py::new_candidates —
     # the same code the pruning tests assert on): probe → persist →
-    # distinct-pid collect (fills the cache) → pruned exact residual.
-    # The probe fn is injected per the config's filter.
+    # distinct-pid collect (fills the cache) → pruned exact residual
     new, probe_cache = new_candidates(
-        candidates, seen, flt, cfg.bloom_shards, use_bloom=True,
-        probe_fn=(
-            probe_cuckoo if cfg.seen_filter == "cuckoo" else probe_bloom
-        ),
+        candidates, seen, flt, cfg.bloom_shards, use_bloom=True
     )
     new = new.persist()
     mark("fetch_validate")
@@ -564,15 +545,17 @@ def run_wave(
         store.write(frontier_next, "frontier", wave + 1)
         frontier_counts["n"] = int(obs.get["n"])
 
-    def job_filter_cuckoo():
-        # cuckoo twin of job_filter_bloom: insert the delta, guard on a
-        # driver-side load estimate (cfg.cuckoo_buckets UNDERestimates
-        # capacity once shards have grown, so post-saturation waves keep
-        # the exact occupancy check — conservative), rebuild saturated
-        # or degraded shards from the pruned seen scan at doubled size.
-        # A shard that degraded below the gate stays correctness-safe
-        # (its probe answers all-true → exact fallback) until the gate
-        # fires and rebuilds it.
+    def job_filter():
+        # delta = the cached `new` DF — identical rows to the seen delta
+        # job_seen persists, without waiting on (or re-reading) that
+        # write. The saturation guard is GATED on a driver-side load
+        # estimate from the running key count (job_seen has finished,
+        # so n_new is known), free until the estimate reaches 0.6;
+        # cfg.cuckoo_buckets UNDERestimates capacity once shards have
+        # grown, so post-saturation waves keep the exact occupancy check
+        # (conservative). A shard that degraded below the gate stays
+        # correctness-safe (its probe answers all-true → exact fallback)
+        # until the gate fires and rebuilds it.
         upd = update_cuckoo(flt, new, cfg.bloom_shards)
         total_keys = int(prev_seen_total) + new_counts["n"]
         est_load = total_keys / (cfg.bloom_shards * cfg.cuckoo_buckets * 4)
@@ -583,77 +566,27 @@ def run_wave(
             )
         else:
             final = upd
-        store.write(final.repartition(_filter_width(cfg)), "cuckoo", wave + 1)
-        if guarded:
-            upd.unpersist()
-            # the saturation rebuild caches its key scan so the
-            # distinct-pid probe and the rebuild share one
-            # materialization; release it with the write done (absent
-            # when the guard found nothing saturated)
-            kc = getattr(final, "_keys_cache", None)
-            if kc is not None:
-                kc.unpersist()
-
-    def job_filter_bloom():
-        import math
-
-        # delta = the cached `new` DF — identical rows to the seen delta
-        # job_seen persists, without waiting on (or re-reading) that write
-        bloom_upd = update_bloom(flt, new, cfg.bloom_shards)
-        # Saturation guard, GATED so it is free until genuinely needed:
-        # the expected per-shard fill is computable driver-side from the
-        # running key count (job_seen has finished, so n_new is known)
-        # with zero Spark jobs — 1-exp(-k·n/(shards·nbits)). Only when
-        # that estimate crosses 0.3 (safety margin under the 0.4 rebuild
-        # trigger; pmod(xxhash64) spreads keys tightly enough that no
-        # shard can exceed the trigger while the mean estimate sits
-        # under the gate) does the exact popcount job + possible rebuild
-        # run. cfg.bloom_bits UNDERestimates nbits once shards have
-        # grown, so post-saturation waves keep the exact check — the
-        # conservative direction. A/B-profiled: ungated, the popcount
-        # job added ~1-2 s to every wave's state chain at bench scale.
-        total_keys = int(prev_seen_total) + new_counts["n"]
-        est_fill = 1.0 - math.exp(
-            -cfg.bloom_k * (total_keys / cfg.bloom_shards) / cfg.bloom_bits
-        )
-        guarded = est_fill >= 0.3
-        if guarded:
-            # guard persists bloom_upd (popcount + write share one
-            # computation of the merge); released after the write
-            bloom_final = grow_saturated_shards(
-                spark, bloom_upd, seen, new, cfg.bloom_shards
-            )
-        else:
-            bloom_final = bloom_upd
         # the cogroup merge runs at shuffle width, but the write needs
         # ~64 MB files, not one file per merge task
-        store.write(
-            bloom_final.repartition(_filter_width(cfg)), "bloom", wave + 1
-        )
+        store.write(final.repartition(_filter_width(cfg)), "cuckoo", wave + 1)
         if guarded:
-            # unpersist whenever the guard persisted, INCLUDING the
-            # no-saturation path where bloom_final IS bloom_upd — the
-            # old identity check leaked one cached bloom (shards ×
-            # bitmap bytes) per wave once est_fill stayed ≥ 0.3, which
-            # is permanent after any shard grows (ADVICE.md r4)
-            bloom_upd.unpersist()
-            # same release for the rebuild's cached key scan (cuckoo
-            # twin in job_filter_cuckoo; absent when nothing saturated)
-            kc = getattr(bloom_final, "_keys_cache", None)
+            # the guard persisted `upd` (occupancy + write share one
+            # merge); release it whether or not a shard was rebuilt, and
+            # the rebuild's cached key scan with it (absent when the
+            # guard found nothing saturated)
+            upd.unpersist()
+            kc = getattr(final, "_keys_cache", None)
             if kc is not None:
                 kc.unpersist()
 
     # ---- STATE chain: everything wave w+1 needs. job_seen runs FIRST
     # and alone: its write materializes the cached `new` end-to-end
-    # (candidate pipeline + bloom probe + seen scan run exactly once);
-    # the frontier/bloom writes then fork concurrently over the warm
+    # (candidate pipeline + filter probe + seen scan run exactly once);
+    # the frontier/filter writes then fork concurrently over the warm
     # cache. Launching all three cold would race each job into
     # recomputing the probe pipeline's broadcast inputs.
     job_seen()
-    _run_concurrently([
-        job_frontier,
-        job_filter_cuckoo if cfg.seen_filter == "cuckoo" else job_filter_bloom,
-    ])
+    _run_concurrently([job_frontier, job_filter])
     n_new = new_counts["n"]
     mark("state_chain")
 
@@ -670,7 +603,7 @@ def run_wave(
         # committed to the manifest) by run_crawl into the summary —
         # they decompose each wave into the fetch/join/validate work
         # that SHOULD scale with cores vs the budget-select + seen/
-        # frontier/bloom state writes whose scheduling+fsync floor does
+        # frontier/filter state writes whose scheduling+fsync floor does
         # not (store-join evidence, VERDICT.md r2 next-round #8)
         "spans": {
             _marks[i][0]: round(_marks[i][1] - _marks[i - 1][1], 2)
@@ -704,8 +637,6 @@ def run_crawl(
     Resume needs no special casing: if a committed snapshot exists the
     loop simply continues from it (BASELINE.json:14 "resumable restarts").
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     # LOUD on malformed dimension tables, once per run (two tiny agg
     # jobs — not per wave): the reference simulator's dicts keep one
     # entry per domain, while the engine's broadcast joins would fan
@@ -732,12 +663,12 @@ def run_crawl(
     frontier_count = int(state["frontier_count"])
     wave_secs: list[float] = []
     wave_spans: list[dict] = []
-    # Single background worker so output writes + commits stay strictly
-    # wave-ordered (the manifest commit point must never reorder) while
-    # overlapping with the NEXT wave's fetch. A crash before a pending
-    # commit simply resumes from the last committed wave; the stale
-    # uncommitted dirs are overwritten on retry (tableio docstring).
-    bg = ThreadPoolExecutor(max_workers=1)
+    # Output writes + commits go to the single output worker, so they
+    # stay strictly wave-ordered (the manifest commit point must never
+    # reorder) while overlapping with the NEXT wave's fetch. A crash
+    # before a pending commit simply resumes from the last committed
+    # wave; the stale uncommitted dirs are overwritten on retry (tableio
+    # docstring).
     pending = []
 
     def expire_states() -> None:
@@ -789,7 +720,7 @@ def run_crawl(
             # (last_wave() would otherwise resume past a missing wave).
             while pending:
                 pending.pop(0).result()
-            pending.append(bg.submit(
+            pending.append(_OUTPUT_POOL.submit(
                 lambda fin=finish_outputs, w=wave + 1, i=info: (
                     fin(), store.commit(w, i)
                 )
@@ -804,7 +735,9 @@ def run_crawl(
         # retained window is anchored at the crawl's true end state
         expire_states()
     finally:
-        bg.shutdown(wait=True)
+        # a failed wave still lets the queued output work finish before
+        # the error propagates, as the old per-crawl pool's shutdown did
+        wait(pending)
     # per-wave fetch counts come from the committed manifests: the count
     # is taken inside each wave's background output job (off the state
     # chain's critical path), so it is only authoritative post-drain
@@ -835,10 +768,9 @@ def revoke_urls(
     robots: DataFrame | None = None,
 ) -> dict:
     """Seed revocation — the end-to-end consumer of the cuckoo filter's
-    DELETION capability (BASELINE.json:6 "cuckoo/bloom"; deletion is
-    exactly what the cuckoo variant adds over the bloom,
-    operators/cuckoo.py), published as a normal committed wave so
-    :func:`run_crawl` resumes from it with no special casing.
+    DELETION capability (operators/cuckoo.py), published as a normal
+    committed wave so :func:`run_crawl` resumes from it with no special
+    casing.
 
     ``urls``: a DataFrame with a ``url`` column (raw — canonicalized
     here with the same A4 rules the crawl applies), semi-joined against
@@ -876,13 +808,11 @@ def revoke_urls(
          for still-queued keys (broadcast semi-join, bounded output)
          and, finding any, republishes ``w+1`` with them unqueued and
          the filter carried forward (the ``repaired`` audit field).
-      2. filter at ``w+1``: the cuckoo path DELETES in place —
+      2. filter at ``w+1``: the revoked keys are DELETED in place —
          O(revoked) work touching only the affected shards regardless
          of crawl age (a key inserted while its shard was degraded has
          no stored fingerprint; ``_delete`` no-ops on it, safe because
-         degraded shards probe as maybe-seen anyway). The bloom path
-         cannot delete, so it REBUILDS from the compacted seen set — a
-         full scan, the documented cost of choosing bloom.
+         degraded shards probe as maybe-seen anyway).
       3. frontier carried to ``w+1`` minus the revoked keys (broadcast
          anti-join — the revocation list is the small side, collected
          driver-side up front so no post-compaction step carries
@@ -1044,21 +974,9 @@ def revoke_urls(
         # deduped), so the post-revocation count is exactly derivable —
         # no third full scan of the 10^10-row table
         seen_total = int(manifest["seen_total"]) - n_rev
-        if cfg.seen_filter == "cuckoo":
-            flt = delete_cuckoo(
-                store.read(spark, "cuckoo", w), rev, cfg.bloom_shards
-            )
-        else:
-            # rebuild seeded from zeroed-out copies of wave w's shards so
-            # saturation-grown nbits survive revocation — resetting to
-            # cfg.bloom_bits would re-pack the full seen set into
-            # undersized bitmaps and push their fill toward 1.0 (every
-            # probe → exact residual) until the next saturation rebuild
-            flt = update_bloom(
-                zeroed_like(store.read(spark, "bloom", w)),
-                store.read_upto(spark, "seen", w),
-                cfg.bloom_shards,
-            )
+        flt = delete_cuckoo(
+            store.read(spark, "cuckoo", w), rev, cfg.bloom_shards
+        )
         store.write(
             flt.repartition(_filter_width(cfg)), cfg.seen_filter, w + 1
         )

@@ -27,7 +27,7 @@ rules every query here follows:
 parity + bit-exact floats) and is run by tests/test_oracle.py.
 
 Queries without an oracle entry (value ``None``) are genuinely
-non-SQL-expressible ops (crawl wave, bloom filter, approx sketches);
+non-SQL-expressible ops (crawl wave, cuckoo filter, approx sketches);
 the driver records a weaker rows-only check for those.
 
 The registry is capped at 50 entries: round 1 registered 51 and the
@@ -1718,7 +1718,7 @@ def crawl_trace_from_documents(spark, sf, max_waves=2):
                 spark.read.parquet(f"{tmp}/robots.parquet"),
                 spark.read.parquet(f"{tmp}/politeness.parquet"),
                 C.CrawlConfig(max_waves=max_waves,
-                              bloom_shards=4, bloom_bits=1 << 14),
+                              bloom_shards=4, cuckoo_buckets=1 << 10),
             )
         except BaseException:
             # a failed build must not strand a partial graph+snapshot

@@ -54,6 +54,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # one crawl wave + revocation runs a few hundred distinct
+        # generated classes; the default 100-entry codegen cache evicted
+        # them, so every wave recompiled ~100 classes with Janino
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

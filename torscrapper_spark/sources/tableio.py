@@ -20,7 +20,7 @@ talks to this interface.
 
 Delta-table convention: tables registered as *deltas* (e.g. ``seen``)
 append one version dir per wave and are read as the union of all
-versions ≤ w; state tables (``frontier``, ``bloom``) are read at
+versions ≤ w; state tables (``frontier``, ``cuckoo``) are read at
 exactly version w.
 
 Delta compaction (:meth:`SnapshotStore.compact` — the Iceberg
@@ -269,7 +269,7 @@ class SnapshotStore:
         self, tables: list[str], retain_last: int = 2
     ) -> dict:
         """Iceberg ``expire_snapshots`` for STATE tables (frontier /
-        bloom / cuckoo — read at exactly one version, so every wave's
+        cuckoo — read at exactly one version, so every wave's
         dir is a FULL copy of the state): delete version dirs older
         than ``last_wave - retain_last + 1``. At 10^10 scale the
         frontier and filter snapshots dominate storage — O(waves ×
