@@ -245,8 +245,9 @@ def update_cuckoo(filt: DataFrame, delta: DataFrame, num_shards: int
 
 def delete_cuckoo(filt: DataFrame, keys: DataFrame, num_shards: int
                   ) -> DataFrame:
-    """Remove the keys' fingerprints (seed revocation). Caller contract: every key was previously
-    inserted (standard cuckoo-filter delete semantics)."""
+    """Remove the keys' fingerprints (seed revocation). Caller contract:
+    every key was previously inserted (standard cuckoo-filter delete
+    semantics)."""
     d = with_pid(keys.select("url_hash"), num_shards)
 
     def merge(key, hashes_it: pd.DataFrame, state: pd.DataFrame
@@ -388,8 +389,8 @@ def grow_saturated_cuckoo(
     insert failure probability climbs steeply above ~0.84 at 4
     slots/bucket) — or already degraded — are REBUILT from the full key
     set of their bucket (partition-pruned seen scan unioned with this
-    wave's delta) at nbuckets doubled until the expected load ≤ 0.5. The common case costs one occupancy
-    job. Returns the (possibly partially rebuilt) filter; the input's
+    wave's delta) at nbuckets doubled until the expected load ≤ 0.5.
+    The common case costs one occupancy job. Returns the (possibly partially rebuilt) filter; the input's
     persist is left for the caller to release after materializing, and
     when a rebuild ran the result carries the key scan's cache as
     ``_keys_cache`` (see :func:`~.seen.rebuild_saturated`) — release

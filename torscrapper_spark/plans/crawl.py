@@ -81,8 +81,7 @@ SELECT_ROWS_PER_TASK = 400_000
 
 
 # Driver threads live as long as the process: every new Python thread
-# that calls into py4j opens its own connection and JVM thread, and a
-# pool per wave and per crawl started three of them per wave.
+# that calls into py4j opens its own connection and JVM thread.
 # _STATE_POOL runs the state chain's concurrent writes; _OUTPUT_POOL's
 # single worker runs each wave's output write + commit in submission
 # (wave) order.
