@@ -41,7 +41,10 @@ def _golden_trace(res):
     ).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("budget", [5, 2], ids=["b5", "b2"])
+# The ids keep the names they had while the bloom filter was the
+# prefilter, so a case's history stays under one name; the filter
+# is now the cuckoo one and the goldens are unchanged.
+@pytest.mark.parametrize("budget", [5, 2], ids=["b5_bloom", "b2_bloom"])
 def test_trace_and_seen_match_golden(
     spark, tiny_tables, tiny_dir, tmp_store_dir, budget
 ):
@@ -336,7 +339,8 @@ def test_synthetic_fetcher_matches_store_join(
     assert j_seen == s_seen
 
 
-@pytest.mark.parametrize("budget", [5, 2], ids=["b5", "b2"])
+# ids: see test_trace_and_seen_match_golden
+@pytest.mark.parametrize("budget", [5, 2], ids=["b5_bloom", "b2_bloom"])
 def test_medium_tier_trace_and_seen_match_golden(
     spark, medium_tables, medium_dir, tmp_store_dir, budget
 ):

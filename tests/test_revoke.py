@@ -267,7 +267,8 @@ def test_revoke_forget_removes_from_seen_and_cuckoo(spark, tiny_dir):
     assert multi <= rev_urls
 
 
-def test_revoke_reseed_refetches_exactly_the_revoked(spark, tiny_dir):
+@pytest.mark.parametrize("filt", [C.CrawlConfig.seen_filter])
+def test_revoke_reseed_refetches_exactly_the_revoked(spark, tiny_dir, filt):
     ps, seeds, robots, pol = _inputs(spark, tiny_dir)
     cfg = _cfg(max_waves=2)
     store = SnapshotStore(tempfile.mkdtemp())
@@ -286,6 +287,8 @@ def test_revoke_reseed_refetches_exactly_the_revoked(spark, tiny_dir):
     # reseed mode touches neither the seen set nor the filter
     assert out["seen_total"] == pre_seen
     assert store.base_wave("seen") is None
+    assert (sorted(map(tuple, store.read(spark, filt, w + 1).collect()))
+            == sorted(map(tuple, store.read(spark, filt, w).collect())))
 
     C.run_crawl(spark, store, ps, seeds, robots, pol,
                 _cfg(max_waves=w + 4))
@@ -298,7 +301,8 @@ def test_revoke_reseed_refetches_exactly_the_revoked(spark, tiny_dir):
     assert (others == 1).all()
 
 
-def test_revoke_forget_unqueues_a_frontier_url(spark, tiny_dir):
+@pytest.mark.parametrize("filt", [C.CrawlConfig.seen_filter])
+def test_revoke_forget_unqueues_a_frontier_url(spark, tiny_dir, filt):
     """Forget-mode revocation of a URL that is still QUEUED (in the
     frontier, not yet fetched) must remove it from the frontier in the
     same step it leaves seen — left behind it would fetch the
@@ -335,6 +339,13 @@ def test_revoke_forget_unqueues_a_frontier_url(spark, tiny_dir):
     assert not (seen_now & rev_hashes)   # forgotten
     assert front_now <= seen_now         # invariant survives
     assert out["frontier_count"] == len(front_now)
+    kept = spark.createDataFrame(
+        pd.DataFrame({"url_hash": pd.Series(sorted(seen_now), dtype="int64")})
+    )
+    probed = probe_cuckoo(
+        kept, store.read(spark, filt, w + 1), cfg.bloom_shards
+    ).toPandas()
+    assert probed["maybe_seen"].all()    # filter ⊇ seen survives
 
     # the resumed crawl never fetches any URL twice: the revoked ones
     # were never fetched, so even link-rediscovery queues them once
